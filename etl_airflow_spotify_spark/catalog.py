@@ -9,14 +9,20 @@ the file stores parquet TIMESTAMP(NANOS) which Spark's vectorized reader
 rejects, so we read the physical int64 (``spark.sql.legacy.parquet.
 nanosAsLong``) and convert to TIMESTAMP_NTZ at microsecond precision —
 bit-identical to what DuckDB produces for the same file.
+
+``local_frame`` builds the other kind of input: a small frame from rows
+the driver already holds (a loop's profile, a local finish's output).
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .session import configure
 
@@ -68,6 +74,22 @@ def spread(df: DataFrame, key: str) -> DataFrame:
     if len(df.inputFiles()) < target:
         return df.repartition(target, key)
     return df
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType | str) -> DataFrame:
+    """A frame over driver-held tuple ``rows``, handed to the JVM as an
+    Arrow table so the plan root is a ``LocalRelation``. Built from the
+    Python rows directly, it would be a ``LogicalRDD`` instead, and
+    every action on it would start a Python worker to unpickle them."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema=schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str,

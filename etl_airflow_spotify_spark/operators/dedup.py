@@ -25,7 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from ..caching import persist_tracked
 
-from ..catalog import spread as _spread
+from ..catalog import local_frame, spread as _spread
 
 
 # -- shingling --------------------------------------------------------------
@@ -543,8 +543,7 @@ def connected_components_star(pairs: DataFrame,
             for mem in members.values():
                 label = min(mem)
                 stars.extend((label, n) for n in mem if n != label)
-            e = e.sparkSession.createDataFrame(stars, e.schema) \
-                if stars else e.limit(0)
+            e = local_frame(e.sparkSession, stars, e.schema)
             converged = True
             break
     if not converged:

@@ -26,6 +26,8 @@ engines.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -385,3 +387,34 @@ def louvain_oracle_sql(edge_cte: str, rounds: int) -> str:
            (SELECT m2 FROM m2) * COALESCE(i.in2, 0) - f.tot * f.tot
                AS q_num
     FROM ftot f LEFT JOIN fin i ON i.c = f.c""")
+
+
+def kcore_peel_local(table: pa.Table, k: int, first_round: int,
+                     last_round: int) -> list[tuple[int, int, int]]:
+    """Peel rounds ``first_round..last_round`` of the k-core profile on
+    the driver, over a (src, dst) edge table that already fits there.
+
+    Same round as the distributed one in queries/graph.py: survivors
+    are the nodes with out-degree >= k (k >= 1), and an edge survives
+    when both endpoints do. Node ids map to dense indices once, so a
+    round is one ``bincount`` and two boolean gathers. Returns one
+    (round, nodes_kept, edges_kept) row per round; once a round repeats
+    the previous (nodes, edges) pair the edge set is unchanged, so the
+    remaining rounds repeat it without running.
+    """
+    n = table.num_rows
+    ids, idx = np.unique(np.concatenate([table.column("src").to_numpy(),
+                                         table.column("dst").to_numpy()]),
+                         return_inverse=True)
+    src, dst = idx[:n], idx[n:]
+    out: list[tuple[int, int, int]] = []
+    for r in range(first_round, last_round + 1):
+        keep = np.bincount(src, minlength=ids.size) >= k
+        both = keep[src] & keep[dst]
+        src, dst = src[both], dst[both]
+        out.append((r, int(keep.sum()), int(src.size)))
+        if len(out) >= 2 and out[-2][1:] == out[-1][1:]:
+            out.extend((rr, *out[-1][1:])
+                       for rr in range(r + 1, last_round + 1))
+            break
+    return out

@@ -41,6 +41,31 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Driver heap for ``get_session``: half the memory this process may
+    use, capped at 24g. The budget is the smaller of the cgroup limit
+    (v2 ``memory.max`` or v1 ``memory.limit_in_bytes``) and
+    ``MemAvailable``. Spark sizes its storage + execution pool from the
+    heap, so a heap larger than the box gets the JVM OOM-killed instead
+    of spilling."""
+    limits = []
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                limits.append(int(f.read()))
+        except (OSError, ValueError):
+            pass  # absent, or "max" (no limit)
+    try:
+        with open("/proc/meminfo") as f:
+            limits += [int(line.split()[1]) * 1024 for line in f
+                       if line.startswith("MemAvailable:")]
+    except OSError:
+        pass
+    half_mib = min(limits, default=48 * 1024 ** 3) // 2 // 1024 ** 2
+    return f"{max(512, min(24 * 1024, half_mib))}m"
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
 
@@ -144,7 +169,9 @@ def get_session(app_name: str = "etl-airflow-spotify-spark",
         SparkSession.builder.appName(app_name)
         .master(f"local[{n}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

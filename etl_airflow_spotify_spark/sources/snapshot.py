@@ -17,24 +17,18 @@ from __future__ import annotations
 
 import os
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..catalog import local_frame
 from ..spotify.schemas import RAW_SNAPSHOT
 
 
 def snapshot_from_dict(spark: SparkSession, raw: dict) -> DataFrame:
     """Wrap an extract_full_dataset()-shaped dict (extract.py:271-276)
     into a typed 1-row, JVM-resident DataFrame."""
-    row = {
-        "extraction_timestamp": raw.get("extraction_timestamp"),
-        "releases": raw.get("releases", []),
-        "audio_features": raw.get("audio_features", []),
-        "categories": raw.get("categories", []),
-    }
-    table = pa.Table.from_pylist([row], schema=to_arrow_schema(RAW_SNAPSHOT))
-    return spark.createDataFrame(table, schema=RAW_SNAPSHOT)
+    row = (raw.get("extraction_timestamp"), raw.get("releases", []),
+           raw.get("audio_features", []), raw.get("categories", []))
+    return local_frame(spark, [row], RAW_SNAPSHOT)
 
 
 def write_snapshot(df: DataFrame, directory: str, run_ts: str) -> str:

@@ -15,7 +15,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from etl_airflow_spotify_spark.session import get_session
 
-    s = get_session("pytest", cpus=8, shuffle_partitions=8)
+    # Sized like any other session: cores and shuffle partitions from
+    # default_parallelism() (SPARK_GRAFT_CPUS), heap from the box.
+    s = get_session("pytest")
     yield s
     s.stop()
 

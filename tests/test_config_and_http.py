@@ -1,4 +1,5 @@
-"""O7 config engine + O3 HTTP retry client + O8 logging setup.
+"""O7 config engine + O3 HTTP retry client + O8 logging setup, and the
+session's default heap.
 
 Pure-Python (no Spark session needed): override precedence, dot-path
 lookup, defaulting, and every retry path through a scripted fake
@@ -113,6 +114,28 @@ logging:
         h.close()
     assert "hello file" in (tmp_path / "logs" / "run.log").read_text()
     lg.handlers.clear()
+
+
+# -- session sizing ----------------------------------------------------------
+
+
+def test_default_driver_memory_fits_the_box():
+    """The default heap is at most half of what the box has free (a
+    24g heap on a 15 GiB box got the JVM OOM-killed), capped at 24g."""
+    from etl_airflow_spotify_spark.session import default_driver_memory
+
+    heap = default_driver_memory()
+    assert heap.endswith("m")
+    mib = int(heap[:-1])
+    assert 512 <= mib <= 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            avail = next(int(line.split()[1]) // 1024 for line in f
+                         if line.startswith("MemAvailable:"))
+    except OSError:
+        pytest.skip("no /proc/meminfo")
+    # MemAvailable moves between the two reads; allow 1 GiB of drift
+    assert mib <= max(512, avail // 2 + 512)
 
 
 # -- HttpSpotifyClient (O3) --------------------------------------------------

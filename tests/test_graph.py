@@ -130,3 +130,106 @@ def test_cooccurrence_edges_symmetric_distinct(spark):
     got = sorted((r["src"], r["dst"]) for r in
                  G.cooccurrence_edges(df, "g", "i").collect())
     assert got == [(10, 11), (11, 10)]
+
+
+# ------------------------------------------------------------ X123 k-core
+def _py_peel(edges, k, rounds):
+    """Reference peel: every round re-derives survivors from scratch,
+    with no fixed-point shortcut."""
+    from collections import Counter
+    out = []
+    for r in range(1, rounds + 1):
+        deg = Counter(s for s, _ in edges)
+        keep = {v for v, d in deg.items() if d >= k}
+        edges = [(s, d) for s, d in edges if s in keep and d in keep]
+        out.append((r, len(keep), len(edges)))
+    return out
+
+
+def _edge_table(edges):
+    import pyarrow as pa
+    return pa.table({"src": pa.array([s for s, _ in edges], pa.int64()),
+                     "dst": pa.array([d for _, d in edges], pa.int64())})
+
+
+def test_kcore_peel_local_matches_python_reference():
+    k5 = [(a, b) for a in range(1, 6) for b in range(1, 6) if a != b]
+    pendants = _sym([(1, 6), (1, 7), (2, 8)])
+    # k=2: a triangle with a 5-node tail; the tail peels one node per
+    # round from its free end, then the triangle is the fixed point.
+    cascade = _sym([(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6),
+                    (6, 7), (7, 8)])
+    cases = [(k5 + pendants, 4, 8), (cascade, 2, 8), ([], 3, 8)]
+    for edges, k, rounds in cases:
+        want = _py_peel(edges, k, rounds)
+        got = G.kcore_peel_local(_edge_table(edges), k, 1, rounds)
+        assert got == want, (k, got, want)
+        # each converges inside the window: the tail repeats verbatim
+        assert got[-1][1:] == got[-2][1:]
+    assert _py_peel(k5 + pendants, 4, 2)[0] == (1, 5, 20)
+    assert [r[1:] for r in _py_peel(cascade, 2, 8)][:6] == \
+        [(7, 14), (6, 12), (5, 10), (4, 8), (3, 6), (3, 6)]
+    # a later start labels its rounds from first_round on
+    got = G.kcore_peel_local(_edge_table(cascade), 2, 3, 8)
+    assert got == [(r + 2, n, e) for r, n, e in _py_peel(cascade, 2, 6)]
+
+
+def _is_local_relation(df) -> bool:
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return "LocalRelation" in plan and "LogicalRDD" not in plan
+
+
+def test_kcore_profile_same_on_every_branch(spark, sf_dir, monkeypatch):
+    """The gate only picks where rounds run. All distributed, switching
+    to the driver after round 1, and all on the driver must give the
+    same profile. At the oracle scales a 4M gate always takes the
+    local path, so this is what covers the distributed rounds."""
+    import etl_airflow_spotify_spark.queries.graph as Q
+    from etl_airflow_spotify_spark.catalog import load_table
+
+    starts = []
+    peel = G.kcore_peel_local
+
+    def traced(table, k, first_round, last_round):
+        starts.append(first_round)
+        return peel(table, k, first_round, last_round)
+
+    monkeypatch.setattr(G, "kcore_peel_local", traced)
+
+    def profile(gate):
+        monkeypatch.setattr(Q, "KCORE_LOCAL_FINISH_EDGE_MAX", gate)
+        starts.clear()
+        df = Q.kcore_peeling_profile(spark, sf_dir)
+        assert _is_local_relation(df)
+        return sorted(map(tuple, df.collect())), list(starts)
+
+    n0 = G.cooccurrence_edges(load_table(spark, sf_dir, "lineitem"),
+                              "l_orderkey", "l_partkey").count()
+    # -1, not 0: a graph that peels to nothing has 0 <= 0 edges left
+    distributed, s = profile(-1)
+    assert s == [] and len(distributed) == Q.KCORE_ROUNDS
+    n1 = distributed[0][2]
+    assert n1 < n0, "round 1 must peel for the mid-way switch to happen"
+    switched, s = profile(n1 + (n0 - n1) // 2)
+    assert s == [2]
+    local, s = profile(n0 + 1)
+    assert s == [1]
+    assert switched == distributed and local == distributed, distributed
+
+
+def test_star_cc_local_finish_is_local_relation(spark):
+    """Once star-CC's driver finish runs, its edges re-enter as an
+    Arrow-built LocalRelation, so the output plan holds no LogicalRDD
+    when its input is local too."""
+    from etl_airflow_spotify_spark.catalog import local_frame
+    from etl_airflow_spotify_spark.operators.dedup import \
+        connected_components_star
+
+    # two paths: neither is a star, so round 1 changes the edge set
+    # and the finish runs below the gate
+    pairs = local_frame(spark, [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11),
+                                (11, 12), (12, 13)], "id_a long, id_b long")
+    out = connected_components_star(pairs)
+    assert _is_local_relation(out)
+    assert dict(map(tuple, out.collect())) == \
+        {**{v: 1 for v in range(1, 6)}, **{v: 10 for v in range(10, 14)}}
