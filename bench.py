@@ -14,11 +14,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import threading
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from etl_airflow_spotify_spark.caching import release_all  # noqa: E402
 from etl_airflow_spotify_spark.queries import scale as scale_q  # noqa: E402
@@ -349,39 +351,58 @@ HEADLINE = [
     "hdbscan_mutual_reachability",
 ]
 
-# r9 verdict item 1b: the driver's round-over-round compare only sees
-# queries present in BOTH rounds' stdout lines, so a query that IMPROVES
-# falls out of the top-slowest window and its win disappears from the
-# per-query comparison (r9: four 2-7x wins read as "dropped_from_bench").
-# Make the shown set comparison-stable: last round's shown queries are
-# listed first (they are the driver's compare base), then the remaining
-# char budget is filled with the slowest of the rest. This only changes
+# The driver's round-over-round compare only sees queries present in
+# BOTH rounds' stdout lines, so a query that IMPROVES would fall out of
+# the top-slowest set and its win out of the comparison. The shown set
+# therefore carries over last round's shown queries (the driver's compare
+# base, read from the newest committed BENCH_rNN.json the driver could
+# parse), ranked by LAST round's times so an improved query keeps its
+# slot, and keeps SHOWN_RESERVE of the budget for the slowest of the
+# rest, so a new query that regresses is still seen. This only changes
 # WHICH entries appear in stdout's capped "queries" dict; "value" still
 # totals every headline query and the detail file carries all of them.
-SHOWN_CARRYOVER = [
-    "link_prediction_eval", "percolation_robustness", "deepwalk_corpus",
-    "hdbscan_mutual_reachability", "dbscan_rfm_segments",
-    "copurchase_communities", "ktruss_peeling_profile",
-    "louvain_phase1_communities", "boruvka_msf_rounds", "luby_mis",
-    "scc_pivot_fwbw", "clustering_coefficient_profile",
-    "weisfeiler_lehman_profile", "copurchase_weighted_sssp",
-    "power_iteration_hubs", "part_pagerank", "betweenness_kseeds",
-    "hits_supplier_part", "temporal_triangle_census",
-    "bradley_terry_suppliers", "copurchase_hop_distance",
-    "personalized_pagerank", "disparity_backbone", "kcore_peeling_profile",
-    "densest_subgraph_peel", "recsys_quality_metrics", "lof_rfm_outliers",
-    "semantic_dedup_clusters", "single_link_dendrogram",
-    "dedup_cluster_assign_star", "bpe_merge_table",
-    "markov_removal_attribution", "frequent_brand_triples",
-    "bootstrap_ci_mean", "dedup_keep_best", "greedy_graph_coloring",
-    "greedy_source_cover", "copurchase_assortativity",
-    "bagged_stump_forest", "bcubed_linkage_eval", "itemitem_cf_recommend",
-    "incremental_corpus_dedup", "stream_cdc_scd2", "gale_shapley_matching",
-    "mondrian_kanon_partition", "ind_discovery",
-    "butterfly_copurchase_census", "mutual_best_matching",
-    "ppjoin_prefix_similarity", "stump_learning_curve", "knn_label_spread",
-    "randomization_test_discount", "brown_forsythe_nations",
-]
+STDOUT_BUDGET = 1800
+SHOWN_RESERVE = 0.2
+
+
+def last_shown(root: str = REPO) -> dict[str, float]:
+    """``{query: sec}`` shown in the newest committed ``BENCH_rNN.json``
+    whose stdout the driver parsed; rounds stored as ``"parsed": null``
+    (or without a ``queries`` dict) are skipped."""
+    rounds = sorted((int(m[1]), f) for f in os.listdir(root)
+                    if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f)))
+    for _, name in reversed(rounds):
+        with open(os.path.join(root, name)) as f:
+            parsed = json.load(f).get("parsed")
+        if isinstance(parsed, dict) and isinstance(parsed.get("queries"),
+                                                   dict):
+            return parsed["queries"]
+    return {}
+
+
+def capped_line(line: dict, timings: dict[str, float],
+                carryover: dict[str, float]) -> dict:
+    """``line`` plus the ``queries`` that fit in STDOUT_BUDGET chars of JSON:
+    carried-over queries (slowest in ``carryover`` first) up to
+    (1 - SHOWN_RESERVE) of the budget, then the slowest of the rest by
+    ``timings``, then carried-over ones again. A name that does not fit
+    is skipped, not the end of the fill: a shorter one after it may
+    still fit."""
+    out = {**line, "queries": {}, "queries_shown": 0}
+    shown = out["queries"]
+    carried = sorted((n for n in timings if n in carryover),
+                     key=carryover.get, reverse=True)
+    rest = sorted((n for n in timings if n not in carryover),
+                  key=timings.get, reverse=True)
+    for names, cap in ((carried, STDOUT_BUDGET * (1 - SHOWN_RESERVE)),
+                       (rest, STDOUT_BUDGET), (carried, STDOUT_BUDGET)):
+        for name in (n for n in names if n not in shown):
+            shown[name] = timings[name]
+            out["queries_shown"] = len(shown)
+            if len(json.dumps(out, separators=(",", ":"))) > cap:
+                del shown[name]
+    out["queries_shown"] = len(shown)
+    return out
 
 
 class _LoadTrace:
@@ -553,29 +574,18 @@ def main() -> None:
         os.path.join("/tmp", f"BENCH_DETAIL_session_{os.getpid()}.json"))
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
-    shown: dict[str, float] = {}
     base = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "queries": shown,
         "n_queries": len(timings),
         "detail": detail_path,
         "runs_per_query": 3,
         "timing": "min_of_2_steady_state_runs",
         "sf": sf_val,
     }
-    budget = 1800
-    order = sorted(timings, key=timings.get, reverse=True)
-    carry_set = set(SHOWN_CARRYOVER)
-    for name in ([n for n in order if n in carry_set]
-                 + [n for n in order if n not in carry_set]):
-        shown[name] = timings[name]
-        if len(json.dumps(base, separators=(",", ":"))) > budget:
-            del shown[name]
-            break
-    base["queries_shown"] = len(shown)
-    print(json.dumps(base, separators=(",", ":")))
+    line = capped_line(base, timings, last_shown())
+    print(json.dumps(line, separators=(",", ":")))
     spark.stop()
 
 

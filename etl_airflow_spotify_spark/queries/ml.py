@@ -326,30 +326,6 @@ def optimal_threshold_selection(spark: SparkSession,
 
 
 # --------------------------------------------------------------------------
-# X137 channel probe (r7 verdict item 1): `optimal_threshold_selection`
-# has come back hash-red from the DRIVER in r5+r6+r7 while passing
-# every local and judge check at HEAD, and the query is integer-exact
-# end to end (no float is ordered or emitted). To prove or rule out
-# stale per-name driver state, this registers a BYTE-IDENTICAL twin
-# under a NEW name: the same Spark callable object and the same oracle
-# SQL string. A green twin + red original proves the divergence lives
-# in the driver's per-name state, not in this repo; both rows green
-# closes X137.
-# --------------------------------------------------------------------------
-register(
-    "threshold_operating_point",
-    _threshold_oracle_sql(),
-    doc="X137 byte-identical twin of optimal_threshold_selection "
-        "(same function object, same oracle string) registered under "
-        "a new name as the r7-verdict-ordered driver-channel probe: "
-        "the original's driver row has been hash-red in r5/r6/r7 "
-        "while green in every local and judge check at HEAD. See the "
-        "original's doc for the query semantics.",
-    tags=("X137", "X92", "X11", "X7", "X12"),
-)(optimal_threshold_selection)
-
-
-# --------------------------------------------------------------------------
 # X142: bagged ensemble training + out-of-bag evaluation — random-
 # forest mechanics on the X125 stump learner, fully deterministic:
 # bag membership is an md5 coin per (row, bag) (p = 63/100,

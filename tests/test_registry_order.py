@@ -1,194 +1,120 @@
-"""Pin the driver-window invariant.
+"""Pin the laws of the driver window.
 
-The correctness driver checks only the first 50 entries of ``queries()``
-in dict order (round 1 evidence: CORRECTNESS_r01.json is exactly the
-first 50 registrations). Rounds 1-7 used the window to close the
-attestation ledger; round 8 rotated it to re-attestation duty.
-
-Round 9 (r8 verdict items 1/2):
-
-* FORCED      — the four r8 hash-red rows (X137 original + twin, X283,
-                X285). Root cause was in-repo: the oracle result schema
-                carried HUGEINT columns (uncast window SUMs) while
-                Spark emitted LongType — the driver's hash is
-                type-sensitive, the local value-compare is not. The
-                BIGINT casts are in; all four stay forced until green.
-* CHANGED_R9  — queries whose bodies changed this round (ADVICE
-                widen-before-multiply, the friedman tie-division
-                guard, the k-truss deg-broadcast gate).
-* OLDEST_R1   — the 14 remaining round-1-latest rows (r8's R9_BACKLOG).
-* R2_COHORT   — the first 18 (alphabetical, oracle-bearing) of the 41
-                round-2-latest rows; the other 23 queue as R10_BACKLOG.
-* NEW_R9      — this round's new classes (<= 9 per the verdict cap),
-                appended as they land so the window stays <= 50.
+The correctness driver hash-checks only the first ``WINDOW`` entries of
+``queries()`` in dict order. ``registry.driver_rank`` derives that order
+from the committed ``CORRECTNESS_rNN.json`` ledgers, so these tests state
+what every window must satisfy rather than which names it holds.
 """
 
-import glob
-import json
-import os
-
-from etl_airflow_spotify_spark.registry import DRIVER_ORDER, all_queries
-
-WINDOW = 50
-
-FORCED = [
-    "optimal_threshold_selection",  # X137: red r5-r8
-    "threshold_operating_point",    # X137 byte-identical twin
-    "ks_two_sample_prices",         # X283: red r8
-    "sprt_conversion_monitor",      # X285: red r8
-]
-
-CHANGED_R9 = [
-    "mcnemar_paired_rules",         # X286 widen-before-multiply
-    "friedman_priority_weeks",      # X280 tie guard + widening
-    "butterfly_copurchase_census",  # X282 widen-before-multiply
-    "ktruss_peeling_profile",       # X225 deg broadcast gated
-    "clustering_coefficient_profile",  # X167 shares the helper
-]
-
-# latest driver row is CORRECTNESS_r01 — the final r1 cohort
-OLDEST_R1 = [
-    "revenue_by_region", "rollup_returns", "scalar_battery",
-    "segment_stats", "sessionize_events", "setops_customers",
-    "tfidf_cosine_pairs", "tfidf_top_terms", "top_orders_per_customer",
-    "top_revenue_orders", "training_data_prep", "udf_surface_stats",
-    "udf_zscore_groups", "word_frequencies",
-]
-
-# latest driver row is CORRECTNESS_r02 — first 18 oracle-bearing,
-# alphabetical
-R2_COHORT = [
-    "agg_lists", "array_battery", "bloom_join_pruning",
-    "bucketed_zero_shuffle_join", "cdc_merge_incremental",
-    "cdc_merge_upsert", "countmin_heavy_hitters",
-    "customer_order_distribution", "dataset_split",
-    "decontaminate_ngram", "dedup_cluster_assign_star",
-    "important_part_value", "late_ship_priority",
-    "lateral_recent_orders", "map_battery", "multimodal_embed",
-    "nullsafe_join_counts", "part_supplier_variety",
-]
-
-# Round-2-latest rows that did NOT fit this window — first claim on
-# the round-10 window. (The 9 oracle-less r2 rows — Spotify REST
-# dataflow, sketch profiles, streaming append — are rows-only BY
-# DESIGN and never burn a window slot.)
-R10_BACKLOG = [
-    "pii_redaction", "quantile_stats", "rank_battery",
-    "rich_idle_customers", "sequence_packing", "skew_salted_join",
-    "sole_fault_suppliers", "stratified_corpus_mix",
-    "stream_cdc_upsert", "stream_dedup_watermark",
-    "stream_session_windows", "stream_sliding_counts",
-    "stream_stateful_user_stats", "stream_static_enrich",
-    "stream_stream_join", "stream_tumbling_counts",
-    "top_supplier_revenue", "unpivot_metrics", "vector_near_dup_lsh",
-    "vector_topk_exact", "vector_topk_ivf", "vector_topk_ivf_persisted",
-    "vector_topk_ivfpq",
-]
-
-# Operator classes ADDED in round 9 — appended to DRIVER_ORDER as they
-# land so they are attested the round they land. Maps query name ->
-# class tag.
-NEW_R9: dict[str, str] = {
-    "runs_test_daily_revenue": "X287",
-    "iv_wald_estimate": "X288",
-    "cochran_q_rules": "X289",
-    "littles_law_flow_audit": "X290",
-    "gumbel_weekly_maxima": "X291",
-    "logrank_purchase_groups": "X292",
-    "jonckheere_priority_trend": "X293",
-    "dgim_purchase_hours": "X294",
-    "hdbscan_mutual_reachability": "X295",
-}
-
-MAX_NEW_R9 = 9  # r8 verdict item 6
+import __spark_entry__ as entrymod
+from etl_airflow_spotify_spark.registry import (
+    CODE_CHANGED_AFTER, WINDOW, QuerySpec, _REGISTRY, all_queries,
+    driver_rank, ledger_rows, staleness, usable,
+)
 
 
-def _correctness_rows() -> dict[str, list[tuple[int, dict]]]:
-    root = os.path.join(os.path.dirname(__file__), "..")
-    out: dict[str, list[tuple[int, dict]]] = {}
-    for path in sorted(glob.glob(os.path.join(root,
-                                              "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(path)[13:-5])
-        with open(path) as f:
-            rows = json.load(f)
-        for name, row in rows.items():
-            out.setdefault(name, []).append((rnd, row))
-    return out
+def _stale(name: str, ledger) -> int:
+    return staleness(ledger.get(name, []), CODE_CHANGED_AFTER.get(name, 0))
 
 
 def _attested() -> set[str]:
     """Queries with a USABLE driver row (hash-green or declared
     rows-only) in any prior round. A hash-failed row is not an
     attestation."""
-    return {name for name, rows in _correctness_rows().items()
-            if any(r.get("err") in (None, "no_oracle")
-                   and r.get("hash_match") is not False
-                   for _, r in rows)}
-
-
-def test_driver_order_no_duplicates():
-    assert len(DRIVER_ORDER) == len(set(DRIVER_ORDER))
-
-
-def test_driver_order_is_exactly_the_planned_window():
-    expected = FORCED + CHANGED_R9 + OLDEST_R1 + R2_COHORT + list(NEW_R9)
-    assert list(DRIVER_ORDER) == expected
-    assert len(DRIVER_ORDER) <= WINDOW
-
-
-def test_new_r9_respects_verdict_cap():
-    assert len(set(NEW_R9.values())) <= MAX_NEW_R9
-
-
-def test_new_r9_reps_carry_their_tags():
-    qs = all_queries()
-    for name, tag in NEW_R9.items():
-        assert name in qs, f"window rep {name} not registered"
-        assert tag in qs[name].tags, f"{name} does not carry {tag}"
-
-
-def test_driver_order_names_exist():
-    qs = all_queries()
-    missing = [n for n in DRIVER_ORDER if n not in qs]
-    assert not missing, \
-        f"DRIVER_ORDER references unregistered queries: {missing}"
-
-
-def test_x137_twin_is_byte_identical():
-    """The forced pair only means something if the twin is the SAME
-    computation: same Spark callable object, same oracle SQL string."""
-    qs = all_queries()
-    orig = qs["optimal_threshold_selection"]
-    twin = qs["threshold_operating_point"]
-    assert twin.spark_fn is orig.spark_fn
-    assert twin.oracle == orig.oracle
-
-
-def test_forced_rows_were_red_and_are_the_hugeint_fix_set():
-    """Every forced slot re-attests a row that was hash-red in r8 —
-    exactly the HUGEINT-typing set, no slot wasted on a green row."""
-    rows = _correctness_rows()
-    for name in FORCED:
-        r8 = [r for rnd, r in rows.get(name, []) if rnd == 8]
-        assert r8 and r8[0].get("hash_match") is False, (
-            f"{name} was not hash-red in r8 — forced slot wasted")
+    return {name for name, rows in ledger_rows().items()
+            if any(usable(r) for _, r in rows)}
 
 
 def test_rotation_cohorts_are_genuinely_stale():
-    """Every rotation slot re-attests a query whose latest driver row
-    really is from the claimed round — no slot wasted."""
-    rows = _correctness_rows()
-    for name, want in ([(n, 1) for n in OLDEST_R1]
-                       + [(n, 2) for n in R2_COHORT + R10_BACKLOG]):
-        assert name in rows, f"{name} has no driver row at all"
-        assert max(r for r, _ in rows[name]) == want, (
-            f"{name} latest driver row is not round {want}")
+    """Every window slot re-attests a query at least as stale as every
+    oracle-bearing query left outside the window: no slot is wasted on a
+    fresh row while a staler one waits."""
+    qs, ledger = all_queries(), ledger_rows()
+    window = list(qs)[:WINDOW]
+    waiting = [_stale(n, ledger) for n in list(qs)[WINDOW:]
+               if qs[n].oracle is not None]
+    stalest_waiting = min(waiting, default=float("inf"))
+    wasted = [n for n in window if _stale(n, ledger) > stalest_waiting]
+    assert not wasted, (
+        f"window slots held by rows fresher than round "
+        f"{stalest_waiting}: {wasted}")
+
+
+def test_driver_order_is_exactly_the_planned_window():
+    """Every oracle-bearing query with no usable attestation (no row, a
+    red latest row, or code changed since its row) is in the window,
+    ahead of every query that does have one."""
+    qs, ledger = all_queries(), ledger_rows()
+    void = [n for n, s in qs.items()
+            if s.oracle is not None and _stale(n, ledger) == 0]
+    assert list(qs)[:len(void)] == void
+
+
+def test_driver_order_no_duplicates():
+    """The driver order holds every registration exactly once, and
+    ranking it again changes nothing."""
+    qs = all_queries()
+    assert sorted(qs) == sorted(_REGISTRY)
+    again = driver_rank(list(qs.values()), ledger_rows())
+    assert [s.name for s in again] == list(qs)
+
+
+def test_driver_order_names_exist():
+    """The driver contract presents the derived order."""
+    qs = all_queries()
+    assert list(entrymod.queries()) == list(qs)
+    assert list(entrymod.oracle_sql()) == [
+        n for n, s in qs.items() if s.oracle is not None]
 
 
 def test_changed_queries_all_have_oracles():
+    """Every CODE_CHANGED_AFTER entry names a registered, oracle-bearing
+    query and a round the ledgers already hold."""
     qs = all_queries()
-    for name in FORCED + CHANGED_R9:
+    newest = max(rnd for rows in ledger_rows().values() for rnd, _ in rows)
+    for name, rnd in CODE_CHANGED_AFTER.items():
+        assert name in qs, f"{name} is not registered"
         assert qs[name].oracle, f"{name} lost its oracle"
+        assert rnd <= newest, f"{name}: round {rnd} is not in the ledgers"
+
+
+def _spec(name: str, oracle: str | None = "SELECT 1") -> QuerySpec:
+    return QuerySpec(name=name, spark_fn=lambda spark, sf: None,
+                     oracle=oracle)
+
+
+GREEN = {"err": None, "hash_match": True}
+RED = {"err": None, "hash_match": False}
+ROWS_ONLY = {"err": "no_oracle", "hash_match": None}
+
+
+def test_rank_red_latest_row_first():
+    """A red latest row ranks with the never-attested, ahead of every
+    green one, whatever its older rows say; rows-only queries go last."""
+    specs = [_spec("green_r1"), _spec("rows_only", None),
+             _spec("green_r3"), _spec("red_r3")]
+    ledger = {"green_r1": [(1, GREEN)],
+              "rows_only": [(1, ROWS_ONLY)],
+              "green_r3": [(1, RED), (3, GREEN)],
+              "red_r3": [(1, GREEN), (2, GREEN), (3, RED)]}
+    ranked = [s.name for s in driver_rank(specs, ledger, {})]
+    assert ranked == ["red_r3", "green_r1", "green_r3", "rows_only"]
+
+
+def test_rank_without_ledger_is_registration_order():
+    specs = [_spec("c"), _spec("a", None), _spec("b"), _spec("d")]
+    ranked = [s.name for s in driver_rank(specs, {}, {})]
+    assert ranked == ["c", "b", "d", "a"]
+
+
+def test_code_change_voids_older_rows_until_a_newer_one():
+    specs = [_spec("old"), _spec("changed")]
+    ledger = {"old": [(1, GREEN)], "changed": [(2, GREEN)]}
+    voided = driver_rank(specs, ledger, {"changed": 2})
+    assert [s.name for s in voided] == ["changed", "old"]
+    ledger["changed"].append((3, GREEN))
+    reattested = driver_rank(specs, ledger, {"changed": 2})
+    assert [s.name for s in reattested] == ["old", "changed"]
 
 
 def test_window_has_no_rows_only_slots():
@@ -197,7 +123,7 @@ def test_window_has_no_rows_only_slots():
     qs = all_queries()
     rows_only = [n for n in list(qs)[:WINDOW] if qs[n].oracle is None]
     assert not rows_only, (
-        f"rows-only queries holding r9 window slots: {rows_only}")
+        f"rows-only queries holding window slots: {rows_only}")
 
 
 def test_every_query_attested_or_windowed():
