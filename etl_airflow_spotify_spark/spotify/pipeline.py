@@ -10,7 +10,16 @@ analog).
 
 Run stats (A1) are row counts observed while the tables are written: each
 table carries a ``DataFrame.observe`` count, so the single write pass
-reports them and no table is read a second time to count it."""
+reports them and no table is read a second time to count it.
+
+The raw snapshot is written first and alone: it is the durable replay
+boundary, so it must exist before any table does. The table writes then
+run concurrently (``sinks.save_tables``): each is a one-task job on the
+1-row snapshot ``LocalRelation``, so one after another they would keep
+one core busy. The ``{name}_latest`` views carry the schema the tables
+were written with, so publishing launches no job.
+
+``RunResult.phases`` holds the wall seconds of each phase (``PHASES``)."""
 
 from __future__ import annotations
 
@@ -24,6 +33,9 @@ from ..sinks import publish_latest, save_tables
 from ..sources.snapshot import snapshot_from_dict, write_snapshot
 from ..sources.spotify_rest import SpotifyClient, extract_full_dataset
 from .normalize import snapshot_tables
+
+PHASES = ("extract", "snapshot", "write_snapshot", "normalize", "save",
+          "publish")
 
 
 @dataclass
@@ -57,6 +69,7 @@ class RunResult:
     paths: dict[str, str] = field(default_factory=dict)
     elapsed_sec: float = 0.0
     error: str | None = None
+    phases: dict[str, float] = field(default_factory=dict)
 
 
 def format_run_summary(result: RunResult, now: str | None = None) -> str:
@@ -97,26 +110,40 @@ def run(spark: SparkSession, client: SpotifyClient, config: PipelineConfig,
     run-summary stats the reference reports (A1/A2/O6,
     etl_pipeline.py:184-237). Failures return a failed result rather
     than raising (etl_pipeline.py:227-237)."""
-    t0 = time.time()
+    t0 = time.perf_counter()
+    phases = dict.fromkeys(PHASES, 0.0)
+
+    def timed(phase, fn, *args, **kwargs):
+        start = time.perf_counter()
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            phases[phase] = time.perf_counter() - start
+
     try:
-        raw = extract_full_dataset(client, limit=config.limit,
-                                   country=config.country, run_ts=run_ts)
-        snapshot = snapshot_from_dict(spark, raw)
+        raw = timed("extract", extract_full_dataset, client,
+                    limit=config.limit, country=config.country, run_ts=run_ts)
+        snapshot = timed("snapshot", snapshot_from_dict, spark, raw)
         paths = {}
         if config.save_raw:
-            paths["raw"] = write_snapshot(
-                snapshot, f"{config.output_dir}/raw", run_ts)
-        tables = snapshot_tables(snapshot, run_date=run_date)
+            paths["raw"] = timed("write_snapshot", write_snapshot, snapshot,
+                                 f"{config.output_dir}/raw", run_ts)
+        tables = timed("normalize", snapshot_tables, snapshot,
+                       run_date=run_date)
         counts = {name: Observation(name) for name in tables}  # A1
-        paths.update(save_tables(
-            {name: df.observe(counts[name], F.count(F.lit(1)).alias("rows"))
-             for name, df in tables.items()},
-            f"{config.output_dir}/processed", run_ts, fmt=config.fmt))
-        publish_latest(spark, {n: p for n, p in paths.items() if n != "raw"},
-                       fmt=config.fmt)
+        table_paths = timed("save", save_tables, {
+            name: df.observe(counts[name], F.count(F.lit(1)).alias("rows"))
+            for name, df in tables.items()},
+            f"{config.output_dir}/processed", run_ts, fmt=config.fmt)
+        timed("publish", publish_latest, spark, table_paths,
+              {name: df.schema for name, df in tables.items()},
+              fmt=config.fmt)
+        paths.update(table_paths)
         stats = {name: obs.get["rows"] for name, obs in counts.items()}
         return RunResult(status="success", run_ts=run_ts, stats=stats,
-                         paths=paths, elapsed_sec=time.time() - t0)
+                         paths=paths, elapsed_sec=time.perf_counter() - t0,
+                         phases=phases)
     except Exception as e:  # noqa: BLE001
         return RunResult(status="failed", run_ts=run_ts,
-                         elapsed_sec=time.time() - t0, error=str(e))
+                         elapsed_sec=time.perf_counter() - t0, error=str(e),
+                         phases=phases)

@@ -6,11 +6,16 @@ and the tracks<->features left join."""
 
 from __future__ import annotations
 
+import collections
+import os
 import threading
+from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import AnalysisException
 
+from etl_airflow_spotify_spark.sinks import publish_latest, save_tables
 from etl_airflow_spotify_spark.sources.spotify_rest import (
     FakeSpotifyClient, extract_full_dataset)
 from etl_airflow_spotify_spark.sources.snapshot import snapshot_from_dict
@@ -127,6 +132,90 @@ def test_pipeline_end_to_end(spark, tmp_path):
     # idempotency: same run_ts refuses to double-write
     res2 = run(spark, FakeSpotifyClient(), cfg, run_ts="20260813T000000")
     assert res2.status == "failed"
+
+
+def test_run_reports_phase_seconds(spark, tmp_path):
+    from etl_airflow_spotify_spark.spotify.pipeline import (PipelineConfig,
+                                                            run)
+
+    cfg = PipelineConfig(output_dir=str(tmp_path), limit=5)
+    res = run(spark, FakeSpotifyClient(), cfg, run_ts="phases",
+              run_date=RUN_DATE)
+    assert res.status == "success", res.error
+    assert set(res.phases) == {"extract", "snapshot", "write_snapshot",
+                               "normalize", "save", "publish"}
+    assert all(sec >= 0 for sec in res.phases.values()), res.phases
+    assert sum(res.phases.values()) <= res.elapsed_sec
+
+
+@contextmanager
+def _job_group(sc, group):
+    """Run the block under job group ``group``; yield a function that
+    returns the group's jobs once the listener bus has caught up."""
+    previous = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return [sc.statusTracker().getJobInfo(j)
+                for j in sc.statusTracker().getJobIdsForGroup(group)]
+
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", previous)
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "csv", "json"])
+def test_latest_views_carry_written_schema(spark, tables, tmp_path, fmt):
+    """Each ``{name}_latest`` view has the written table's column names
+    and types (CSV included: no inferred types), holds its rows, and
+    publishing launches no Spark job. CSV reads an empty string back as
+    null, so the expected CSV rows carry null there."""
+    paths = save_tables(tables, str(tmp_path), "pub", fmt=fmt)
+    with _job_group(spark.sparkContext, f"publish-{fmt}") as jobs:
+        views = publish_latest(
+            spark, paths, {n: df.schema for n, df in tables.items()}, fmt=fmt)
+    assert jobs() == []
+    for name, df in tables.items():
+        view = spark.table(views[name])
+        assert [(f.name, f.dataType) for f in view.schema] == \
+               [(f.name, f.dataType) for f in df.schema], name
+        want = [tuple(None if fmt == "csv" and v == "" else v for v in row)
+                for row in df.collect()]
+        assert collections.Counter(map(tuple, view.collect())) == \
+               collections.Counter(want), name
+
+
+def test_save_tables_concurrent_writes_finish_before_raising(spark, tables,
+                                                             tmp_path):
+    """The concurrent writes keep the caller's job group; a failed write
+    is raised only after every other write has finished and every pool
+    thread has exited, and the first failure in table order wins."""
+    from etl_airflow_spotify_spark.spotify.pipeline import (PipelineConfig,
+                                                            run)
+
+    out = str(tmp_path / "processed")
+    with _job_group(spark.sparkContext, "sink-concurrent") as jobs:
+        save_tables(tables, out, "ok")
+    assert len(jobs()) >= len(tables) == 5
+
+    for name in ("categories", "tracks_with_features"):
+        os.makedirs(os.path.join(out, f"{name}_dup"))
+    threads = threading.active_count()
+    with _job_group(spark.sparkContext, "sink-failing") as jobs:
+        with pytest.raises(AnalysisException, match="categories_dup"):
+            save_tables(tables, out, "dup")
+    assert threading.active_count() == threads
+    for name in ("albums", "tracks", "audio_features"):
+        assert os.path.exists(os.path.join(out, f"{name}_dup", "_SUCCESS"))
+    assert {job.status for job in jobs()} == {"SUCCEEDED"}
+
+    # Every table path of run "dup" now exists; the run fails in the sink.
+    cfg = PipelineConfig(output_dir=str(tmp_path), save_raw=False)
+    res = run(spark, FakeSpotifyClient(), cfg, run_ts="dup", run_date=RUN_DATE)
+    assert res.status == "failed" and "albums_dup" in res.error, res.error
+    assert threading.active_count() == threads
 
 
 def _run_within(timeout, *args, **kwargs):
