@@ -34,10 +34,26 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Inferred parquet schemas by (absolute path, mtime_ns, size): inferring
+# one runs a Spark job (~80 ms), reading with a given schema does not.
+# A rewritten file changes its key, so its schema is inferred afresh.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one test table with oracle-compatible types."""
+    """Read one test table with oracle-compatible types. The file's
+    schema is inferred on its first read and reused while the file is
+    unchanged."""
+    # First: nanosAsLong decides what events.ts infers as.
     configure(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    if key in _SCHEMAS:
+        df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
     if name == "events":
         # The driver has generated events.ts two ways across rounds:
         # parquet TIMESTAMP(NANOS) (read as int64 via nanosAsLong) and

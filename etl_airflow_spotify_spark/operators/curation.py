@@ -35,11 +35,13 @@ def md5_bucket(col: Column, mod: int) -> Column:
 # Test-set decontamination (n-gram overlap)
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """Distinct word-level n-grams (lowercased, whitespace-tokenized) —
-    the standard unit for benchmark-contamination checks (e.g. GPT-3
-    appendix C uses 13-gram overlap; n is a knob here)."""
-    toks = F.split(F.trim(F.lower(text)), r"\s+")
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Distinct word-level n-grams of the token array ``toks`` (the
+    lowercased, whitespace-tokenized text) — the standard unit for
+    benchmark-contamination checks (e.g. GPT-3 appendix C uses 13-gram
+    overlap; n is a knob here). ``toks`` must be a projected column: the
+    lambda reads it once per n-gram, so an inlined ``split`` would
+    re-tokenize the whole text for every n-gram."""
     return F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
@@ -67,12 +69,12 @@ def ngram_contamination(train: DataFrame, eval_df: DataFrame,
     explode keeps per-task memory flat (one n-gram per row, not one
     doc's whole set).
     """
+    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("_toks")
+    ngram = F.explode(word_ngrams(F.col("_toks"), n)).alias("ngram")
     t = (spread(train.select(F.col(id_col), F.col(text_col)), id_col)
-         .select(id_col,
-                 F.explode(word_ngrams(F.col(text_col), n)).alias("ngram")))
-    e = (eval_df.select(F.col(id_col).alias("eval_id"), F.col(text_col))
-         .select("eval_id",
-                 F.explode(word_ngrams(F.col(text_col), n)).alias("ngram")))
+         .select(id_col, toks).select(id_col, ngram))
+    e = (eval_df.select(F.col(id_col).alias("eval_id"), toks)
+         .select("eval_id", ngram))
     if broadcast_eval:
         e = F.broadcast(e)
     return (

@@ -95,6 +95,49 @@ def rolling_fingerprint(text: Column, width: int = 16) -> Column:
     return F.array_min(hashes)
 
 
+def word_histogram_stats(toks: str) -> Column:
+    """Per-document word histogram statistics of the token-array column
+    named ``toks``: ``struct(n_words, n_distinct, max_count, entropy)``,
+    entropy being the Shannon entropy in bits, ``-sum(p * log2(p))`` over
+    p = c/n.
+
+    One ``array_sort`` makes equal words adjacent; one ``aggregate``
+    fold over the sorted array measures each run of equal words and
+    closes it into the counts when the next word differs. The fold
+    starts with ``prev = NULL, run = 0``, so the first token (also a
+    lone ``""``) opens a run. A document is one row, so this is a map:
+    no (doc, word) shuffle, no fold on doc, no join back.
+
+    ``toks`` names a projected column, never an expression: the fold
+    reads ``size(toks)`` for every run it closes, and an inlined
+    ``split`` would re-tokenize the text each time. The fold is one SQL
+    expression, so building it is one call into the JVM rather than one
+    per node. A null ``toks`` gives a null struct."""
+    t = f"`{toks}`"
+
+    def term(run: str) -> str:
+        p = f"(CAST({run} AS DOUBLE) / size({t}))"
+        return f"CASE WHEN {run} > 0 THEN -({p} * log2({p})) ELSE 0D END"
+
+    same = "(acc.run > 0 AND w = acc.prev)"
+    return F.expr(f"""aggregate(
+        array_sort({t}),
+        named_struct('prev', CAST(NULL AS STRING), 'run', 0L,
+                     'n_distinct', 0L, 'max_count', 0L, 'entropy', 0D),
+        (acc, w) -> named_struct(
+            'prev', w,
+            'run', IF({same}, acc.run + 1, 1L),
+            'n_distinct', acc.n_distinct + IF({same}, 0L, 1L),
+            'max_count', greatest(acc.max_count, IF({same}, acc.run + 1, 1L)),
+            'entropy', IF({same}, acc.entropy,
+                          acc.entropy + {term("acc.run")})),
+        acc -> named_struct(
+            'n_words', CAST(size({t}) AS BIGINT),
+            'n_distinct', acc.n_distinct,
+            'max_count', acc.max_count,
+            'entropy', acc.entropy + {term("acc.run")}))""")
+
+
 def tfidf_cosine_pairs(docs, id_col: str = "doc_id", text_col: str = "text",
                        max_df: int = 100, threshold: float = 0.3):
     """Document-similarity join on L2-normalized TF-IDF vectors via an
@@ -190,29 +233,19 @@ def repetition_metrics(docs, id_col: str, text_col: str):
       * ``dup_bigram_frac`` — 1 - distinct_bigrams/total_bigrams
         (Gopher's duplicate n-gram fraction, n=2).
 
-    All-JVM expressions: one tokenize, the word histogram is a
-    map-side-combinable groupBy(doc, word), bigrams are built by array
-    indexing (``transform(sequence(...))``) — deterministic positions,
-    no window-over-unordered-rows. Shuffles: the (doc_id, word)
-    histogram — keyed finer than doc_id so one giant document cannot
-    skew a reducer — then its doc_id-keyed fold and the doc_id join
-    with the per-row bigram stats (all narrow, stat-width rows; the
-    corpus text itself shuffles only once, for the histogram).
-    ``training_data_prep_v2`` shows the fused single-pass alternative
-    when these metrics feed a gate rather than a report.
+    Row-local: one tokenize, the word counts come from
+    ``word_histogram_stats`` over the projected tokens, and bigrams are
+    built by array indexing (``transform(sequence(...))``) —
+    deterministic positions, no window-over-unordered-rows. A document
+    is one row in one task, so nothing shuffles. A null text has no
+    tokens and yields no row.
 
     Ratios are exact single divisions of exact BIGINT counts — no
     summation-order dust, so they hash cross-engine after rounding.
     """
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    d = docs.select(F.col(id_col), toks.alias("_toks"))
-
-    wc = (d.select(id_col, F.explode("_toks").alias("_w"))
-          .groupBy(id_col, "_w").agg(F.count("*").alias("_c")))
-    word_stats = wc.groupBy(id_col).agg(
-        F.sum("_c").cast("long").alias("n_words"),
-        F.count("*").cast("long").alias("n_distinct"),
-        (F.max("_c").cast("double") / F.sum("_c")).alias("top_word_frac"))
+    d = (docs.filter(F.col(text_col).isNotNull())
+         .select(F.col(id_col), toks.alias("_toks")))
 
     # CASE guard: Spark's sequence(1, 0) DESCENDS ([1, 0]) rather than
     # returning empty, so a 1-token doc must short-circuit to array().
@@ -220,14 +253,18 @@ def repetition_metrics(docs, id_col: str, text_col: str):
         "CASE WHEN size(_toks) < 2 THEN array() "
         "ELSE transform(sequence(1, size(_toks) - 1), "
         "i -> concat(_toks[i-1], ' ', _toks[i])) END")
-    bg_stats = (d.select(id_col, bigrams.alias("_bgs"))
-                .select(id_col,
-                        F.size("_bgs").cast("long").alias("n_bigrams"),
-                        F.size(F.array_distinct("_bgs")).cast("long")
-                        .alias("n_distinct_bigrams"))
-                .withColumn(
-                    "dup_bigram_frac",
-                    F.when(F.col("n_bigrams") > 0,
-                           1.0 - F.col("n_distinct_bigrams").cast("double")
-                           / F.col("n_bigrams")).otherwise(F.lit(0.0))))
-    return word_stats.join(bg_stats, id_col)
+    return (d.select(id_col, word_histogram_stats("_toks").alias("_h"),
+                     bigrams.alias("_bgs"))
+            .select(id_col,
+                    F.col("_h.n_words").alias("n_words"),
+                    F.col("_h.n_distinct").alias("n_distinct"),
+                    (F.col("_h.max_count").cast("double")
+                     / F.col("_h.n_words")).alias("top_word_frac"),
+                    F.size("_bgs").cast("long").alias("n_bigrams"),
+                    F.size(F.array_distinct("_bgs")).cast("long")
+                    .alias("n_distinct_bigrams"))
+            .withColumn(
+                "dup_bigram_frac",
+                F.when(F.col("n_bigrams") > 0,
+                       1.0 - F.col("n_distinct_bigrams").cast("double")
+                       / F.col("n_bigrams")).otherwise(F.lit(0.0))))

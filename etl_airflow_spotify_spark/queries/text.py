@@ -328,9 +328,9 @@ DUP_BIGRAM_MAX = 0.05
     """,
     doc="X34 Gopher-style repetition filter (Rae et al. 2021 A1.1): "
         "per-doc top-word fraction and duplicate-bigram fraction; keep "
-        "flag under fixed thresholds. One fine-keyed (doc, word) "
-        "aggregate + per-row array expressions; flags are exact "
-        "single divisions so they hash cross-engine.",
+        "flag under fixed thresholds. Row-local: a sorted fold over "
+        "each doc's tokens + per-row array expressions, no shuffle; "
+        "flags are exact single divisions so they hash cross-engine.",
     tags=("X34", "X18", "X14"),
 )
 def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -368,27 +368,24 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Per-doc Shannon entropy of the word distribution plus the "
         "0-1 normalized form — the information-density quality signal "
         "(low entropy == repetitive/templated text, a standard corpus "
-        "filter alongside the Gopher ratios). One fine-keyed (doc, "
-        "word) aggregate then a per-doc fold; entropy terms are "
-        "rounded post-sum (dust ~1e-14 on <=4k-term docs vs 1e-4 "
-        "grid).",
+        "filter alongside the Gopher ratios). Row-local: one sorted "
+        "fold over each doc's tokens (word_histogram_stats), no "
+        "shuffle; entropy terms are rounded post-sum (dust ~1e-14 on "
+        "<=4k-term docs vs 1e-4 grid).",
     tags=("X18", "X7", "X34"),
 )
 def word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    wc = (d.select("doc_id", F.explode(toks).alias("w"))
-          .groupBy("doc_id", "w").agg(F.count("*").alias("c")))
-    tot = wc.groupBy("doc_id").agg(F.sum("c").alias("n"))
-    p = F.col("c").cast("double") / F.col("n")
-    ent = -F.sum(p * F.log2(p))
-    return (wc.join(tot, "doc_id")
-            .groupBy("doc_id", "n")
-            .agg(F.round(ent, 4).alias("word_entropy"),
-                 F.round(ent / F.log2(F.greatest(F.col("n"), F.lit(2))), 4)
-                 .alias("normalized_entropy"))
-            .select("doc_id", F.col("n").cast("long").alias("n_words"),
-                    "word_entropy", "normalized_entropy"))
+    h = (d.filter(F.col("text").isNotNull())
+         .select("doc_id", toks.alias("_toks"))
+         .select("doc_id", T.word_histogram_stats("_toks").alias("_h")))
+    n, ent = F.col("_h.n_words"), F.col("_h.entropy")
+    return h.select(
+        "doc_id", n.alias("n_words"),
+        F.round(ent, 4).alias("word_entropy"),
+        F.round(ent / F.log2(F.greatest(n, F.lit(2))), 4)
+        .alias("normalized_entropy"))
 
 
 POSTINGS_CAP = 5

@@ -75,6 +75,11 @@ CODE_CHANGED_AFTER: dict[str, int] = {
     "dedup_cluster_assign_star": 10,    # Arrow-built union-find finish
     "hdbscan_mutual_reachability": 10,  # uses the star-CC finish
     "dbscan_rfm_segments": 10,          # uses the star-CC finish
+    "training_data_prep_v2": 10,        # row-local word statistics
+    "word_entropy": 10,                 # row-local word statistics
+    "repetition_filter": 10,            # row-local word statistics
+    "decontaminate_ngram": 10,          # n-grams from projected tokens
+    "stream_decontaminate": 10,         # n-grams from projected tokens
 }
 
 Ledger = dict[str, list[tuple[int, dict]]]

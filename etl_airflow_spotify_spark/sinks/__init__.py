@@ -28,6 +28,11 @@ from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 FORMATS = ("csv", "parquet", "json")
+# The CSV writer emits an empty string as ``""`` and a null as nothing.
+# Spark's CSV reader takes both as null while ``nullValue`` is the empty
+# string, its default; with a value no field holds, ``""`` reads back as
+# an empty string and only the bare empty field as null.
+CSV_NULL_SENTINEL = "\u0000"
 
 
 def _write(df: DataFrame, path: str, fmt: str) -> None:
@@ -77,7 +82,8 @@ def publish_latest(spark: SparkSession, paths: dict[str, str],
     for name, path in paths.items():
         reader = spark.read.format(fmt).schema(schemas[name])
         if fmt == "csv":
-            reader = reader.option("header", True)
+            reader = (reader.option("header", True)
+                      .option("nullValue", CSV_NULL_SENTINEL))
         view = f"{name}_latest"
         reader.load(path).createOrReplaceTempView(view)
         views[name] = view

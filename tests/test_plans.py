@@ -299,11 +299,13 @@ def test_nearest_centroid_scoring_is_broadcast(spark, sf_dir):
 
 
 def test_repetition_filter_single_wide_agg(spark, sf_dir):
-    """X34: word histogram is keyed (doc, word) — finer than doc — and
-    bigram stats are per-row array ops; no join back to the base table,
-    no cartesian."""
+    """X34: the word histogram is a sorted fold over each document's own
+    tokens and the bigram stats are per-row array ops, so the plan is a
+    map: no explode, no aggregate, no join back, no cartesian."""
     df = _df("repetition_filter", spark, sf_dir)
     assert not has_cartesian_product(df)
+    assert num_nodes(df, "Generate") == 0
+    assert num_nodes(df, "HashAggregate") == 0
 
 
 def test_equidepth_histogram_no_global_sort(spark, sf_dir):
@@ -317,10 +319,12 @@ def test_equidepth_histogram_no_global_sort(spark, sf_dir):
 
 
 def test_word_entropy_single_exchange_chain(spark, sf_dir):
-    """Entropy folds (doc, word) -> doc; both aggregates and the join
-    hash on doc-prefixed keys — no cartesian, no broadcast explosion."""
+    """Entropy is a sorted fold over each document's own tokens: no
+    explode, no (doc, word) or doc aggregate, no cartesian."""
     df = _df("word_entropy", spark, sf_dir)
     assert not has_cartesian_product(df)
+    assert num_nodes(df, "Generate") == 0
+    assert num_nodes(df, "HashAggregate") == 0
 
 
 def test_dpp_partitioned_join_prunes_at_runtime(spark, sf_dir):
@@ -348,9 +352,22 @@ def test_triangle_count_no_cartesian(spark, sf_dir):
 
 
 def test_training_prep_v2_no_cartesian(spark, sf_dir):
-    """The composed curation pipeline must stay all-hash-join."""
+    """The composed curation pipeline must stay all-hash-join. Its gate
+    signals are row-local folds, so the only explodes are the two
+    n-gram sides of the contamination join."""
     df = _df("training_data_prep_v2", spark, sf_dir)
     assert not has_cartesian_product(df)
+    assert num_nodes(df, "Generate") == 2
+
+
+def test_ngram_contamination_tokenizes_once(spark, sf_dir):
+    """The n-gram lambda reads a projected token column: an inlined split
+    would re-tokenize the whole text once per n-gram."""
+    df = _df("decontaminate_ngram", spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    explodes = [line for line in plan.splitlines() if "Generate" in line]
+    assert len(explodes) == 2
+    assert not any("split(" in line for line in explodes)
 
 
 def test_twap_single_exchange(spark, sf_dir):
