@@ -389,27 +389,74 @@ def louvain_oracle_sql(edge_cte: str, rounds: int) -> str:
     FROM ftot f LEFT JOIN fin i ON i.c = f.c""")
 
 
+def cooccurrence_edges_local(
+        table: pa.Table, group_col: str, item_col: str, max_edges: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """Driver twin of ``cooccurrence_edges`` over a table that already
+    fits on the driver: the same distinct edges, with items as dense ids.
+
+    Returns ``(ids, src, dst)``: ``ids`` the sorted distinct non-null
+    items, ``src``/``dst`` indices into it, one row per distinct
+    directed edge. Rows with a null group or item are dropped and
+    repeated (group, item) rows count once. A group of k items emits its
+    k(k-1) ordered pairs; groups of one size expand together as one
+    (groups, k) block. Returns None, having built no edge, when that
+    pre-distinct total is above ``max_edges``, so the driver never holds
+    more than ``max_edges`` edges.
+    """
+    table = table.select([group_col, item_col]).drop_null()
+    ids, item = np.unique(table.column(item_col).to_numpy(),
+                          return_inverse=True)
+    _, group = np.unique(table.column(group_col).to_numpy(),
+                         return_inverse=True)
+    n = ids.size
+    # Pairs pack into one int64 code (both factors are below the row
+    # count). One sorted code per distinct (group, item): groups are
+    # contiguous.
+    group, item = np.divmod(np.unique(group.astype(np.int64) * n + item), n)
+    starts = np.flatnonzero(np.diff(group, prepend=-1))
+    sizes = np.diff(starts, append=group.size)
+    if int((sizes * (sizes - 1)).sum()) > max_edges:
+        return None
+    codes = [np.empty(0, np.int64)]
+    for k in np.unique(sizes[sizes > 1]):
+        block = item[starts[sizes == k][:, None] + np.arange(k)]
+        a, b = np.nonzero(~np.eye(k, dtype=bool))
+        codes.append((block[:, a] * n + block[:, b]).ravel())
+    src, dst = np.divmod(np.unique(np.concatenate(codes)), n)
+    return ids, src, dst
+
+
 def kcore_peel_local(table: pa.Table, k: int, first_round: int,
                      last_round: int) -> list[tuple[int, int, int]]:
     """Peel rounds ``first_round..last_round`` of the k-core profile on
-    the driver, over a (src, dst) edge table that already fits there.
-
-    Same round as the distributed one in queries/graph.py: survivors
-    are the nodes with out-degree >= k (k >= 1), and an edge survives
-    when both endpoints do. Node ids map to dense indices once, so a
-    round is one ``bincount`` and two boolean gathers. Returns one
-    (round, nodes_kept, edges_kept) row per round; once a round repeats
-    the previous (nodes, edges) pair the edge set is unchanged, so the
-    remaining rounds repeat it without running.
-    """
+    the driver, over a (src, dst) edge table that already fits there:
+    node ids map to dense indices once, then ``kcore_peel_dense``."""
     n = table.num_rows
     ids, idx = np.unique(np.concatenate([table.column("src").to_numpy(),
                                          table.column("dst").to_numpy()]),
                          return_inverse=True)
-    src, dst = idx[:n], idx[n:]
+    return kcore_peel_dense(idx[:n], idx[n:], ids.size, k, first_round,
+                            last_round)
+
+
+def kcore_peel_dense(src: np.ndarray, dst: np.ndarray, n_nodes: int, k: int,
+                     first_round: int, last_round: int
+                     ) -> list[tuple[int, int, int]]:
+    """Peel rounds ``first_round..last_round`` over edges whose endpoints
+    are dense ids in ``[0, n_nodes)``.
+
+    Same round as the distributed one in queries/graph.py: survivors
+    are the nodes with out-degree >= k (k >= 1), and an edge survives
+    when both endpoints do, so a round is one ``bincount`` and two
+    boolean gathers. Returns one (round, nodes_kept, edges_kept) row per
+    round; once a round repeats the previous (nodes, edges) pair the
+    edge set is unchanged, so the remaining rounds repeat it without
+    running.
+    """
     out: list[tuple[int, int, int]] = []
     for r in range(first_round, last_round + 1):
-        keep = np.bincount(src, minlength=ids.size) >= k
+        keep = np.bincount(src, minlength=n_nodes) >= k
         both = keep[src] & keep[dst]
         src, dst = src[both], dst[both]
         out.append((r, int(keep.sum()), int(src.size)))

@@ -436,19 +436,26 @@ def rules_wilson_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # surviving edge set, and edges localCheckpoint per round so the plan
 # stays constant-depth.
 #
-# Measured local finish: the edge set is counted once, and distributed
-# rounds run only while the surviving edge count is above
-# KCORE_LOCAL_FINISH_EDGE_MAX. At or below it, the edges come to the
-# driver with one toArrow() and the remaining rounds peel in NumPy
-# (operators/graph.py::kcore_peel_local) — exact, same profile. Below
-# a few million edges a distributed round is mostly per-job scheduling
-# overhead: on a 4-core box the sf0.01 build (231k edges) took 35 jobs
-# and ~3 s distributed against 7 jobs and ~0.7 s with the local finish,
-# and the sf0.1 build (2.34M edges, fixed point after round 3) ~8.4 s
-# against ~4.2 s. The gate is 4M edges, ~64 MB of int64 pairs, so sf0.1
-# still finishes locally. It reads only the measured size: at any scale
-# the distributed rounds peel until the graph is that small, and the
-# driver never holds more than 4M edges.
+# Where the rounds run is measured, against one gate,
+# KCORE_LOCAL_FINISH_EDGE_MAX (4M, ~64 MB of int64 pairs):
+# * Local start. One row-capped Arrow fetch of the (order, part) pairs
+#   (limit gate + 1, one job). If at most the gate's rows come back and
+#   the pre-distinct edge bound sum k(k-1) over orders of k parts is at
+#   most the gate, the graph is built on the driver
+#   (operators/graph.py::cooccurrence_edges_local, exact twin of
+#   cooccurrence_edges) and every round peels there in NumPy.
+# * Otherwise the edge set is built distributed and counted once;
+#   distributed rounds run while the surviving edge count is above the
+#   gate, then the edges come to the driver with one toArrow() and the
+#   remaining rounds peel there (kcore_peel_local) — same profile.
+# Below a few million edges a distributed round is mostly per-job
+# scheduling: on a 4-core box the sf0.01 build (231k edges) took 35 jobs
+# and ~3 s all distributed, 6 jobs and ~0.9 s with the distributed
+# build and local finish, and 1 job and ~0.2 s with the local start;
+# at sf0.1 (2.39M edges) ~4.5 s with the distributed build and ~1 s
+# with the local start. The driver never holds more than the gate's
+# pairs or edges; above it the distributed rounds peel until the graph
+# is that small.
 # --------------------------------------------------------------------------
 KCORE_K = 72
 KCORE_ROUNDS = 8
@@ -493,14 +500,33 @@ def _kcore_oracle_sql() -> str:
         "distributed (one degree aggregate + two semi-joins, edges "
         "localCheckpoint per round) only while the measured edge set "
         f"is above {KCORE_LOCAL_FINISH_EDGE_MAX:,} (~64 MB of int64 "
-        "pairs); the rest peel exactly on the driver in NumPy over one "
-        "toArrow() of the surviving edges, because below that size "
+        "pairs). When one row-capped Arrow fetch of the (order, part) "
+        "pairs fits that gate, and so does the k(k-1) edge bound, the "
+        "graph is built and peeled exactly on the driver in NumPy; "
+        "otherwise the distributed rounds hand the surviving edges to "
+        "the same NumPy peel once they fit, because below that size "
         "per-job overhead outweighs the data. The profile returns as "
         "an Arrow-built LocalRelation; integer counts, no floats.",
     tags=("X123", "X42", "X7", "X3"),
 )
 def kcore_peeling_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
+    gate = KCORE_LOCAL_FINISH_EDGE_MAX
+    pairs = li.select("l_orderkey", "l_partkey").limit(gate + 1).toArrow()
+    graph = (G.cooccurrence_edges_local(pairs, "l_orderkey", "l_partkey",
+                                        gate)
+             if pairs.num_rows <= gate else None)
+    if graph is None:
+        summaries = _kcore_distributed_rounds(li)
+    else:
+        ids, src, dst = graph
+        summaries = G.kcore_peel_dense(src, dst, ids.size, KCORE_K, 1,
+                                       KCORE_ROUNDS)
+    return local_frame(spark, summaries,
+                       "round INT, nodes_kept BIGINT, edges_kept BIGINT")
+
+
+def _kcore_distributed_rounds(li: DataFrame) -> list[tuple[int, int, int]]:
     edges = G.cooccurrence_edges(li, "l_orderkey", "l_partkey") \
         .localCheckpoint(eager=False)
     n_edges = edges.count()
@@ -533,8 +559,7 @@ def kcore_peeling_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (rr, n_nodes, n_edges)
                 for rr in range(r + 1, KCORE_ROUNDS + 1))
             break
-    return local_frame(spark, summaries,
-                       "round INT, nodes_kept BIGINT, edges_kept BIGINT")
+    return summaries
 
 
 # --------------------------------------------------------------------------

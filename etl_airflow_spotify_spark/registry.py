@@ -71,7 +71,7 @@ LEDGER_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WINDOW = 50
 
 CODE_CHANGED_AFTER: dict[str, int] = {
-    "kcore_peeling_profile": 10,        # driver-side local peel
+    "kcore_peeling_profile": 10,        # driver-side local start
     "dedup_cluster_assign_star": 10,    # Arrow-built union-find finish
     "hdbscan_mutual_reachability": 10,  # uses the star-CC finish
     "dbscan_rfm_segments": 10,          # uses the star-CC finish

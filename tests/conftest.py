@@ -22,6 +22,25 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(group, fn)`` runs ``fn`` under its own Spark job group
+    and returns ``(fn(), number of jobs the group ran)``."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        previous = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", previous)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

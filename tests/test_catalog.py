@@ -9,25 +9,13 @@ import pyarrow.parquet as pq
 from etl_airflow_spotify_spark.catalog import load_table
 
 
-def _jobs_of(spark, group, fn):
-    sc = spark.sparkContext
-    previous = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", previous)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_second_load_reuses_the_inferred_schema(spark, tmp_path):
+def test_second_load_reuses_the_inferred_schema(spark, tmp_path, jobs_of):
     pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}),
                    tmp_path / "t.parquet")
-    first, first_jobs = _jobs_of(
-        spark, "load-first", lambda: load_table(spark, str(tmp_path), "t"))
-    second, second_jobs = _jobs_of(
-        spark, "load-second", lambda: load_table(spark, str(tmp_path), "t"))
+    first, first_jobs = jobs_of(
+        "load-first", lambda: load_table(spark, str(tmp_path), "t"))
+    second, second_jobs = jobs_of(
+        "load-second", lambda: load_table(spark, str(tmp_path), "t"))
     assert first_jobs >= 1
     assert second_jobs == 0
     assert second.schema == first.schema

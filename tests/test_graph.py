@@ -132,6 +132,37 @@ def test_cooccurrence_edges_symmetric_distinct(spark):
     assert got == [(10, 11), (11, 10)]
 
 
+def _local_edges(rows, max_edges=10**6):
+    import pyarrow as pa
+    table = pa.table({"g": pa.array([g for g, _ in rows], pa.int64()),
+                      "i": pa.array([i for _, i in rows], pa.int64())})
+    return G.cooccurrence_edges_local(table, "g", "i", max_edges)
+
+
+def test_cooccurrence_edges_local_equals_distributed(spark):
+    """The driver build is the exact twin of ``cooccurrence_edges``,
+    and its edge-bound gate says "does not fit" exactly when the
+    pre-distinct bound sum k(k-1) is above it."""
+    seven = [(5, i) for i in range(20, 27)]
+    rows = ([(1, 10), (1, 11), (1, 11), (1, None), (None, 12), (None, None),
+             (2, 10), (2, 11), (3, 12), (4, 13), (4, 13), (6, 10), (6, 20)]
+            + seven + seven[:3])
+    for case in (rows, [(3, 12)], []):
+        df = spark.createDataFrame(case, "g long, i long")
+        want = sorted((r["src"], r["dst"]) for r in
+                      G.cooccurrence_edges(df, "g", "i").collect())
+        ids, src, dst = _local_edges(case)
+        assert sorted(zip(ids[src].tolist(), ids[dst].tolist())) == want
+        assert len(set(zip(src.tolist(), dst.tolist()))) == src.size
+    # groups {10,11} x2, {20..26}, {10,20}; 3 and 4 hold one item each
+    bound = 2 + 2 + 7 * 6 + 2
+    assert _local_edges(rows)[1].size < bound  # {10, 11} repeats
+    assert _local_edges(rows, bound - 1) is None
+    assert _local_edges(rows, bound) is not None
+    assert _local_edges([], -1) is None
+    assert _local_edges([], 0) is not None
+
+
 # ------------------------------------------------------------ X123 k-core
 def _py_peel(edges, k, rounds):
     """Reference peel: every round re-derives survivors from scratch,
@@ -179,42 +210,78 @@ def _is_local_relation(df) -> bool:
     return "LocalRelation" in plan and "LogicalRDD" not in plan
 
 
-def test_kcore_profile_same_on_every_branch(spark, sf_dir, monkeypatch):
-    """The gate only picks where rounds run. All distributed, switching
-    to the driver after round 1, and all on the driver must give the
-    same profile. At the oracle scales a 4M gate always takes the
-    local path, so this is what covers the distributed rounds."""
+def test_kcore_profile_same_on_every_branch(spark, sf_dir, monkeypatch,
+                                           jobs_of):
+    """The gate only picks where rounds run. The local start (graph
+    built and peeled on the driver), all distributed, switching to the
+    driver after round 1, and finishing there from round 1 must give
+    the same profile. At the oracle scales a 4M gate always starts
+    locally, so this is what covers the distributed rounds."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.classic.dataframe import DataFrame
+
     import etl_airflow_spotify_spark.queries.graph as Q
     from etl_airflow_spotify_spark.catalog import load_table
 
-    starts = []
-    peel = G.kcore_peel_local
+    starts, fetched = [], []
 
-    def traced(table, k, first_round, last_round):
-        starts.append(first_round)
-        return peel(table, k, first_round, last_round)
+    def trace(name, start):
+        fn = getattr(G, name)
 
-    monkeypatch.setattr(G, "kcore_peel_local", traced)
+        def traced(*args):
+            starts.append((name, start(args)))
+            return fn(*args)
+        monkeypatch.setattr(G, name, traced)
+
+    trace("kcore_peel_local", lambda a: a[2])
+    trace("kcore_peel_dense", lambda a: a[4])
+    trace("cooccurrence_edges_local", lambda a: None)
+    to_arrow = DataFrame.toArrow
+
+    def fetch(self):
+        table = to_arrow(self)
+        fetched.append(table.num_rows)
+        return table
+    monkeypatch.setattr(DataFrame, "toArrow", fetch)
 
     def profile(gate):
         monkeypatch.setattr(Q, "KCORE_LOCAL_FINISH_EDGE_MAX", gate)
         starts.clear()
-        df = Q.kcore_peeling_profile(spark, sf_dir)
+        fetched.clear()
+        df, jobs = jobs_of(f"kcore-{gate}",
+                           lambda: Q.kcore_peeling_profile(spark, sf_dir))
         assert _is_local_relation(df)
-        return sorted(map(tuple, df.collect())), list(starts)
+        return sorted(map(tuple, df.collect())), list(starts), jobs
 
-    n0 = G.cooccurrence_edges(load_table(spark, sf_dir, "lineitem"),
-                              "l_orderkey", "l_partkey").count()
+    li = load_table(spark, sf_dir, "lineitem")
+    n_rows = li.count()
+    n0 = G.cooccurrence_edges(li, "l_orderkey", "l_partkey").count()
+    k = F.count("*")
+    bound = (li.select("l_orderkey", "l_partkey").distinct()
+             .groupBy("l_orderkey").agg((k * (k - 1)).alias("b"))
+             .agg(F.sum("b")).first()[0])
+    assert n_rows < n0 < bound, "a gate in [n0, bound) must start distributed"
+
+    local, s, jobs = profile(Q.KCORE_LOCAL_FINISH_EDGE_MAX)
+    assert s == [("cooccurrence_edges_local", None), ("kcore_peel_dense", 1)]
+    assert jobs == 1 and fetched == [n_rows]
     # -1, not 0: a graph that peels to nothing has 0 <= 0 edges left
-    distributed, s = profile(-1)
+    distributed, s, _ = profile(-1)
     assert s == [] and len(distributed) == Q.KCORE_ROUNDS
     n1 = distributed[0][2]
     assert n1 < n0, "round 1 must peel for the mid-way switch to happen"
-    switched, s = profile(n1 + (n0 - n1) // 2)
-    assert s == [2]
-    local, s = profile(n0 + 1)
-    assert s == [1]
-    assert switched == distributed and local == distributed, distributed
+    switched, s, _ = profile(n1 + (n0 - n1) // 2)
+    assert s == [("cooccurrence_edges_local", None), ("kcore_peel_local", 2),
+                 ("kcore_peel_dense", 2)]
+    finished, s, _ = profile(n0)
+    assert s == [("cooccurrence_edges_local", None), ("kcore_peel_local", 1),
+                 ("kcore_peel_dense", 1)]
+    # too many rows: the capped fetch stops at gate + 1 and the graph
+    # is never built on the driver
+    capped, s, _ = profile(n_rows // 2)
+    assert fetched[0] == n_rows // 2 + 1
+    assert ("cooccurrence_edges_local", None) not in s
+    assert local == distributed == switched == finished == capped, local
 
 
 def test_star_cc_local_finish_is_local_relation(spark):

@@ -360,6 +360,25 @@ def test_training_prep_v2_no_cartesian(spark, sf_dir):
     assert num_nodes(df, "Generate") == 2
 
 
+def test_training_prep_v2_ngrams_read_the_cache_unshuffled(spark, sf_dir):
+    """Both n-gram explodes read the cached document frame, which
+    ``_text_docs`` already hash-partitioned by doc_id. The initial plan
+    still holds ``spread``'s REPARTITION_BY_NUM exchange above the
+    train side's InMemoryTableScan; the executed plan must not, or every
+    call re-shuffles the whole training text."""
+    df = _df("training_data_prep_v2", spark, sf_dir)
+    df.collect()
+    lines = (df._jdf.queryExecution().executedPlan().executedPlan()
+             .toString().splitlines())
+    explodes = [i for i, line in enumerate(lines) if "Generate" in line]
+    assert len(explodes) == 2
+    for i in explodes:
+        scan = next(j for j in range(i, len(lines))
+                    if "InMemoryTableScan" in lines[j])
+        assert not any("Exchange" in line for line in lines[i:scan]), \
+            "\n".join(lines[i:scan + 1])
+
+
 def test_ngram_contamination_tokenizes_once(spark, sf_dir):
     """The n-gram lambda reads a projected token column: an inlined split
     would re-tokenize the whole text once per n-gram."""
