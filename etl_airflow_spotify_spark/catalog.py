@@ -10,6 +10,10 @@ rejects, so we read the physical int64 (``spark.sql.legacy.parquet.
 nanosAsLong``) and convert to TIMESTAMP_NTZ at microsecond precision —
 bit-identical to what DuckDB produces for the same file.
 
+``parquet_footer`` sizes a table from its parquet footers (row count,
+uncompressed bytes per column) with no Spark job, so a query can choose
+a driver-side finish before it plans anything.
+
 ``local_frame`` builds the other kind of input: a small frame from rows
 the driver already holds (a loop's profile, a local finish's output).
 """
@@ -19,6 +23,7 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -34,10 +39,37 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Inferred parquet schemas by (absolute path, mtime_ns, size): inferring
-# one runs a Spark job (~80 ms), reading with a given schema does not.
-# A rewritten file changes its key, so its schema is inferred afresh.
-_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+FileKey = tuple[str, int, int]
+
+# Inferred parquet schemas and footer sizes by (absolute path, mtime_ns,
+# size): inferring a schema runs a Spark job (~80 ms), reading with a
+# given schema does not. A rewritten file changes its key, so both are
+# read afresh.
+_SCHEMAS: dict[FileKey, StructType] = {}
+_FOOTERS: dict[FileKey, tuple[int, dict[str, int]]] = {}
+
+
+def _file_key(sf_dir: str, name: str) -> FileKey:
+    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+    st = os.stat(path)
+    return path, st.st_mtime_ns, st.st_size
+
+
+def parquet_footer(sf_dir: str, name: str) -> tuple[int, dict[str, int]]:
+    """``(rows, {column: uncompressed bytes})`` of one test table, summed
+    over its row groups' footer metadata. Reads only the footer: no
+    Spark job, no data pages."""
+    key = _file_key(sf_dir, name)
+    if key not in _FOOTERS:
+        meta = pq.ParquetFile(key[0]).metadata
+        paths = [meta.schema.column(c).path for c in range(meta.num_columns)]
+        sizes = dict.fromkeys(paths, 0)
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            for c, path in enumerate(paths):
+                sizes[path] += group.column(c).total_uncompressed_size
+        _FOOTERS[key] = (meta.num_rows, sizes)
+    return _FOOTERS[key]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -46,9 +78,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     unchanged."""
     # First: nanosAsLong decides what events.ts infers as.
     configure(spark)
-    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
+    key = _file_key(sf_dir, name)
+    path = key[0]
     if key in _SCHEMAS:
         df = spark.read.schema(_SCHEMAS[key]).parquet(path)
     else:

@@ -9,10 +9,12 @@ see ROUND_NOTES.md's cross-engine hash note).
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame, parquet_footer
 from ..operators import curation as C
 from ..registry import register
 
@@ -355,6 +357,11 @@ def heavy_hitters_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
 V2_TOP_WORD_MAX = 0.12
 V2_DUP_BIGRAM_MAX = 0.05
 V2_ENTROPY_MIN = 4.0
+# The driver finish runs while the documents' parquet footer holds at
+# most this many uncompressed text bytes. The fetched n-grams come to
+# ~4-5x the text, so the Arrow columns stay near the ~64 MB driver
+# budget of graph.KCORE_LOCAL_FINISH_EDGE_MAX (sf0.1 holds 1.5 MB).
+V2_LOCAL_TEXT_BYTES_MAX = 12 * 2 ** 20
 
 
 @register(
@@ -430,9 +437,15 @@ V2_ENTROPY_MIN = 4.0
         "dedup (min id per normalized fingerprint) -> benchmark "
         "decontamination (3-gram overlap vs the eval slice) -> per-"
         "lang corpus stats with exact membership (id_sum). The gate "
-        "signals are row-local folds over each doc's tokens; every "
-        "other stage is shuffle-on-key (fingerprint, n-gram); no "
-        "all-pairs anywhere, so the plan shape survives 100 TB.",
+        "signals, fingerprint and n-grams are row-local columns over "
+        "each doc's tokens. While the documents' parquet footer holds "
+        f"at most {V2_LOCAL_TEXT_BYTES_MAX // 2 ** 20} MiB of text, one "
+        "Arrow fetch of those columns is finished on the driver (dedup, "
+        "decontamination and per-lang sums in Arrow) and returns as a "
+        "LocalRelation: at that size per-job overhead outweighs the "
+        "data. Above it the corpus is cached and every later stage is "
+        "shuffle-on-key (fingerprint, n-gram); no all-pairs anywhere, "
+        "so the plan shape survives 100 TB.",
     tags=("X34", "X15", "X25", "X18", "X2"),
 )
 def training_data_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,13 +455,11 @@ def training_data_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import exact_fingerprint, word_histogram_stats
     from ..queries.text import _docs as _text_docs
 
-    # The gate's four signals become columns of one cached frame: the
-    # word fold and the bigrams run once per document, when the cache is
-    # built, and the gate is a plain filter (no (doc, word) shuffle, no
-    # join back). The gate and both contamination sides read the cache
-    # instead of rescanning the corpus — measured 17s -> ~6s at sf0.1
-    # from the persist alone. The fold and the bigrams read the
-    # projected _toks, never the split expression itself.
+    # The gate's four signals are row-local columns: the word fold and
+    # the bigrams run once per document and the gate is a plain filter
+    # (no (doc, word) shuffle, no join back). The fold, the bigrams and
+    # the n-grams read the projected _toks, never the split expression
+    # itself.
     toks = (_text_docs(spark, sf_dir)
             .select("doc_id", "lang", "text",
                     F.split(F.trim(F.lower(F.col("text"))), r"\s+")
@@ -457,11 +468,11 @@ def training_data_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE WHEN size(_toks) < 2 THEN array() "
         "ELSE transform(sequence(1, size(_toks) - 1), "
         "i -> concat(_toks[i-1], ' ', _toks[i])) END")
-    h = toks.select("doc_id", "lang", "text",
+    h = toks.select("doc_id", "lang", "text", "_toks",
                     word_histogram_stats("_toks").alias("_h"),
                     bigrams.alias("_bgs"))
-    d = persist_tracked(h.select(
-        "doc_id", "lang", "text",
+    signals = h.select(
+        "doc_id", "lang", "text", "_toks",
         F.col("_h.n_words").alias("n_words"),
         F.round(F.col("_h.max_count").cast("double") / F.col("_h.n_words"),
                 4).alias("top_word_frac"),
@@ -469,13 +480,35 @@ def training_data_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.size("_bgs") > 0,
                F.round(1.0 - F.size(F.array_distinct("_bgs")).cast("double")
                        / F.size("_bgs"), 4))
-        .otherwise(F.lit(0.0)).alias("dup_bigram_frac")))
-
+        .otherwise(F.lit(0.0)).alias("dup_bigram_frac"))
     # A null text has null signals, so the gate drops it.
-    gated = d.filter((F.col("top_word_frac") <= V2_TOP_WORD_MAX)
-                     & (F.col("dup_bigram_frac") <= V2_DUP_BIGRAM_MAX)
-                     & (F.col("entropy") >= V2_ENTROPY_MIN)
-                     & (F.col("doc_id") % EVAL_MOD != 0))
+    gate = ((F.col("top_word_frac") <= V2_TOP_WORD_MAX)
+            & (F.col("dup_bigram_frac") <= V2_DUP_BIGRAM_MAX)
+            & (F.col("entropy") >= V2_ENTROPY_MIN)
+            & (F.col("doc_id") % EVAL_MOD != 0))
+    is_eval = F.col("doc_id") % EVAL_MOD == 0
+
+    # A corpus that fits: one Arrow fetch of the row-local columns (two
+    # jobs when spread shuffles the scan), finished on the driver. No
+    # cache, no fingerprint/doc_id/lang shuffles, no broadcast.
+    if (parquet_footer(sf_dir, "documents")[1]["text"]
+            <= V2_LOCAL_TEXT_BYTES_MAX):
+        fetched = signals.select(
+            "doc_id", "lang", "n_words",
+            F.coalesce(gate, F.lit(False)).alias("ok"),
+            is_eval.alias("is_eval"),
+            exact_fingerprint(F.col("text")).alias("fp"),
+            C.word_ngrams(F.col("_toks"), NGRAM_N).alias("ngrams"),
+        ).toArrow()
+        return local_frame(spark, _v2_local_finish(fetched),
+                           "lang STRING, n_docs BIGINT NOT NULL, "
+                           "id_sum BIGINT, total_words BIGINT")
+
+    # The gate and both contamination sides read one cached frame
+    # instead of rescanning the corpus — measured 17s -> ~6s at sf0.1
+    # from the persist alone.
+    d = persist_tracked(signals.drop("_toks"))
+    gated = d.filter(gate)
 
     deduped = (gated.withColumn("fp", exact_fingerprint(F.col("text")))
                .withColumn("keep_id",
@@ -483,7 +516,7 @@ def training_data_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
                .filter(F.col("doc_id") == F.col("keep_id")))
 
     train = d.filter(F.col("doc_id") % EVAL_MOD != 0)
-    evals = d.filter(F.col("doc_id") % EVAL_MOD == 0)
+    evals = d.filter(is_eval)
     contaminated = C.ngram_contamination(
         train, evals, "doc_id", "text", n=NGRAM_N).select("doc_id")
 
@@ -492,6 +525,39 @@ def training_data_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("long").alias("n_docs"),
                  F.sum("doc_id").cast("long").alias("id_sum"),
                  F.sum("n_words").cast("long").alias("total_words")))
+
+
+def _v2_local_finish(t: pa.Table) -> list[tuple]:
+    """The tail of ``training_data_prep_v2`` on the driver, over one
+    fetched row per document: doc_id, lang, n_words, ok (the gate, null
+    as false), is_eval, fp and ngrams. Returns the (lang, n_docs,
+    id_sum, total_words) rows of the distributed plan."""
+    # Decontamination: a train row (is_eval false; a null doc_id is on
+    # neither side) is contaminated when one of its n-grams is an eval
+    # n-gram; gated or not, its doc_id then drops, as in the anti-join.
+    # Null n-grams (from a null text) meet nothing.
+    parent = pc.list_parent_indices(t["ngrams"])
+    flat = pc.list_flatten(t["ngrams"])
+    row_eval = pc.take(t["is_eval"], parent)
+    eval_ngrams = pc.filter(flat, pc.fill_null(row_eval, False))
+    hit = pc.and_(pc.fill_null(pc.invert(row_eval), False),
+                  pc.is_in(flat, value_set=eval_ngrams, skip_nulls=True))
+    contaminated = pc.take(t["doc_id"], pc.filter(parent, hit))
+    # Dedup: keep the ok rows whose doc_id is the minimum of their
+    # fingerprint group (ties all stay; a null fp is a group of its own,
+    # as in the window), then drop the contaminated ids.
+    ok = t.filter(t["ok"])
+    first = ok.group_by("fp", use_threads=False).aggregate(
+        [("doc_id", "min")])
+    group = pc.index_in(ok["fp"], value_set=first["fp"], skip_nulls=False)
+    keep = pc.and_(
+        pc.equal(ok["doc_id"], pc.take(first["doc_id_min"], group)),
+        pc.invert(pc.is_in(ok["doc_id"], value_set=contaminated)))
+    out = ok.filter(keep).group_by("lang", use_threads=False).aggregate(
+        [("doc_id", "count", pc.CountOptions("all")), ("doc_id", "sum"),
+         ("n_words", "sum")])
+    return list(zip(*(out[c].to_pylist() for c in (
+        "lang", "doc_id_count", "doc_id_sum", "n_words_sum"))))
 
 
 PACK_MAX_LEN = 128

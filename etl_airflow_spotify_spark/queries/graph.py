@@ -8,7 +8,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import load_table, local_frame
+from ..catalog import load_table, local_frame, parquet_footer
 from ..operators import graph as G
 from ..registry import register
 
@@ -438,10 +438,11 @@ def rules_wilson_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Where the rounds run is measured, against one gate,
 # KCORE_LOCAL_FINISH_EDGE_MAX (4M, ~64 MB of int64 pairs):
-# * Local start. One row-capped Arrow fetch of the (order, part) pairs
-#   (limit gate + 1, one job). If at most the gate's rows come back and
-#   the pre-distinct edge bound sum k(k-1) over orders of k parts is at
-#   most the gate, the graph is built on the driver
+# * Local start. If lineitem's parquet footer counts at most the gate's
+#   rows (read with no job), one row-capped Arrow fetch of the (order,
+#   part) pairs (limit gate + 1, one job). If at most the gate's rows
+#   come back and the pre-distinct edge bound sum k(k-1) over orders of
+#   k parts is at most the gate, the graph is built on the driver
 #   (operators/graph.py::cooccurrence_edges_local, exact twin of
 #   cooccurrence_edges) and every round peels there in NumPy.
 # * Otherwise the edge set is built distributed and counted once;
@@ -500,8 +501,9 @@ def _kcore_oracle_sql() -> str:
         "distributed (one degree aggregate + two semi-joins, edges "
         "localCheckpoint per round) only while the measured edge set "
         f"is above {KCORE_LOCAL_FINISH_EDGE_MAX:,} (~64 MB of int64 "
-        "pairs). When one row-capped Arrow fetch of the (order, part) "
-        "pairs fits that gate, and so does the k(k-1) edge bound, the "
+        "pairs). When lineitem's parquet footer row count and one "
+        "row-capped Arrow fetch of the (order, part) pairs fit that "
+        "gate, and so does the k(k-1) edge bound, the "
         "graph is built and peeled exactly on the driver in NumPy; "
         "otherwise the distributed rounds hand the surviving edges to "
         "the same NumPy peel once they fit, because below that size "
@@ -512,10 +514,15 @@ def _kcore_oracle_sql() -> str:
 def kcore_peeling_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     gate = KCORE_LOCAL_FINISH_EDGE_MAX
-    pairs = li.select("l_orderkey", "l_partkey").limit(gate + 1).toArrow()
-    graph = (G.cooccurrence_edges_local(pairs, "l_orderkey", "l_partkey",
-                                        gate)
-             if pairs.num_rows <= gate else None)
+    graph = None
+    # More footer rows than the gate: the capped fetch could only come
+    # back full, so skip it.
+    if parquet_footer(sf_dir, "lineitem")[0] <= gate:
+        pairs = (li.select("l_orderkey", "l_partkey").limit(gate + 1)
+                 .toArrow())
+        if pairs.num_rows <= gate:
+            graph = G.cooccurrence_edges_local(pairs, "l_orderkey",
+                                               "l_partkey", gate)
     if graph is None:
         summaries = _kcore_distributed_rounds(li)
     else:

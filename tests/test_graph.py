@@ -240,7 +240,7 @@ def test_kcore_profile_same_on_every_branch(spark, sf_dir, monkeypatch,
 
     def fetch(self):
         table = to_arrow(self)
-        fetched.append(table.num_rows)
+        fetched.append((tuple(table.column_names), table.num_rows))
         return table
     monkeypatch.setattr(DataFrame, "toArrow", fetch)
 
@@ -253,6 +253,7 @@ def test_kcore_profile_same_on_every_branch(spark, sf_dir, monkeypatch,
         assert _is_local_relation(df)
         return sorted(map(tuple, df.collect())), list(starts), jobs
 
+    distributed_rounds = Q._kcore_distributed_rounds
     li = load_table(spark, sf_dir, "lineitem")
     n_rows = li.count()
     n0 = G.cooccurrence_edges(li, "l_orderkey", "l_partkey").count()
@@ -264,7 +265,7 @@ def test_kcore_profile_same_on_every_branch(spark, sf_dir, monkeypatch,
 
     local, s, jobs = profile(Q.KCORE_LOCAL_FINISH_EDGE_MAX)
     assert s == [("cooccurrence_edges_local", None), ("kcore_peel_dense", 1)]
-    assert jobs == 1 and fetched == [n_rows]
+    assert jobs == 1 and fetched == [(("l_orderkey", "l_partkey"), n_rows)]
     # -1, not 0: a graph that peels to nothing has 0 <= 0 edges left
     distributed, s, _ = profile(-1)
     assert s == [] and len(distributed) == Q.KCORE_ROUNDS
@@ -276,10 +277,17 @@ def test_kcore_profile_same_on_every_branch(spark, sf_dir, monkeypatch,
     finished, s, _ = profile(n0)
     assert s == [("cooccurrence_edges_local", None), ("kcore_peel_local", 1),
                  ("kcore_peel_dense", 1)]
-    # too many rows: the capped fetch stops at gate + 1 and the graph
-    # is never built on the driver
+    # more footer rows than the gate: the pairs are never fetched and
+    # the edge set is built distributed
+    built = []
+
+    def build_distributed(li):
+        built.append(li)
+        return distributed_rounds(li)
+    monkeypatch.setattr(Q, "_kcore_distributed_rounds", build_distributed)
     capped, s, _ = profile(n_rows // 2)
-    assert fetched[0] == n_rows // 2 + 1
+    assert len(built) == 1
+    assert all(cols == ("src", "dst") for cols, _ in fetched), fetched
     assert ("cooccurrence_edges_local", None) not in s
     assert local == distributed == switched == finished == capped, local
 

@@ -351,22 +351,32 @@ def test_triangle_count_no_cartesian(spark, sf_dir):
     assert not has_cartesian_product(df)
 
 
-def test_training_prep_v2_no_cartesian(spark, sf_dir):
+def _v2_distributed(spark, sf_dir, monkeypatch):
+    """``training_data_prep_v2``'s distributed plan: the test tables fit
+    its driver finish, so the gate is set below any corpus."""
+    import etl_airflow_spotify_spark.queries.curation as Q
+
+    monkeypatch.setattr(Q, "V2_LOCAL_TEXT_BYTES_MAX", -1)
+    return _df("training_data_prep_v2", spark, sf_dir)
+
+
+def test_training_prep_v2_no_cartesian(spark, sf_dir, monkeypatch):
     """The composed curation pipeline must stay all-hash-join. Its gate
     signals are row-local folds, so the only explodes are the two
     n-gram sides of the contamination join."""
-    df = _df("training_data_prep_v2", spark, sf_dir)
+    df = _v2_distributed(spark, sf_dir, monkeypatch)
     assert not has_cartesian_product(df)
     assert num_nodes(df, "Generate") == 2
 
 
-def test_training_prep_v2_ngrams_read_the_cache_unshuffled(spark, sf_dir):
+def test_training_prep_v2_ngrams_read_the_cache_unshuffled(spark, sf_dir,
+                                                           monkeypatch):
     """Both n-gram explodes read the cached document frame, which
     ``_text_docs`` already hash-partitioned by doc_id. The initial plan
     still holds ``spread``'s REPARTITION_BY_NUM exchange above the
     train side's InMemoryTableScan; the executed plan must not, or every
     call re-shuffles the whole training text."""
-    df = _df("training_data_prep_v2", spark, sf_dir)
+    df = _v2_distributed(spark, sf_dir, monkeypatch)
     df.collect()
     lines = (df._jdf.queryExecution().executedPlan().executedPlan()
              .toString().splitlines())
