@@ -12,7 +12,9 @@ bit-identical to what DuckDB produces for the same file.
 
 ``parquet_footer`` sizes a table from its parquet footers (row count,
 uncompressed bytes per column) with no Spark job, so a query can choose
-a driver-side finish before it plans anything.
+a driver-side finish before it plans anything; ``read_columns`` then
+reads the columns that finish needs on the driver, again with no Spark
+job.
 
 ``local_frame`` builds the other kind of input: a small frame from rows
 the driver already holds (a loop's profile, a local finish's output).
@@ -70,6 +72,21 @@ def parquet_footer(sf_dir: str, name: str) -> tuple[int, dict[str, int]]:
                 sizes[path] += group.column(c).total_uncompressed_size
         _FOOTERS[key] = (meta.num_rows, sizes)
     return _FOOTERS[key]
+
+
+def read_columns(sf_dir: str, name: str, columns: list[str],
+                 dictionary: tuple[str, ...] = ()) -> pa.Table:
+    """The named ``columns`` of one test table as an Arrow table, read on
+    the driver by one ``pq.read_table``: no Spark job. For inputs a
+    footer (``parquet_footer``) has already sized to fit; nothing is
+    memoized, so the driver holds the data only while the caller does.
+    Columns named in ``dictionary`` come back dictionary-encoded, each
+    distinct value held once. ``events`` is refused: its ``ts`` needs
+    ``load_table``'s normalization."""
+    if name == "events":
+        raise ValueError("events must be read with load_table")
+    return pq.read_table(_file_key(sf_dir, name)[0], columns=columns,
+                         read_dictionary=list(dictionary))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -35,19 +35,19 @@ def md5_bucket(col: Column, mod: int) -> Column:
 # Test-set decontamination (n-gram overlap)
 
 
-def word_ngrams(toks: Column, n: int) -> Column:
-    """Distinct word-level n-grams of the token array ``toks`` (the
-    lowercased, whitespace-tokenized text) — the standard unit for
-    benchmark-contamination checks (e.g. GPT-3 appendix C uses 13-gram
-    overlap; n is a knob here). ``toks`` must be a projected column: the
-    lambda reads it once per n-gram, so an inlined ``split`` would
-    re-tokenize the whole text for every n-gram."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-    )
+def word_ngrams(toks: str, n: int) -> Column:
+    """Distinct word-level n-grams of the token-array column named
+    ``toks`` (the lowercased, whitespace-tokenized text) — the standard
+    unit for benchmark-contamination checks (e.g. GPT-3 appendix C uses
+    13-gram overlap; n is a knob here). ``toks`` names a projected
+    column, never an expression: the lambda reads it once per n-gram, so
+    an inlined ``split`` would re-tokenize the whole text for every
+    n-gram. One SQL expression, so building it is one call into the
+    JVM."""
+    t = f"`{toks}`"
+    return F.expr(f"array_distinct(transform("
+                  f"sequence(1, greatest(size({t}) - {n - 1}, 1)), "
+                  f"i -> array_join(slice({t}, i, {n}), ' ')))")
 
 
 def ngram_contamination(train: DataFrame, eval_df: DataFrame,
@@ -70,7 +70,7 @@ def ngram_contamination(train: DataFrame, eval_df: DataFrame,
     doc's whole set).
     """
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("_toks")
-    ngram = F.explode(word_ngrams(F.col("_toks"), n)).alias("ngram")
+    ngram = F.explode(word_ngrams("_toks", n)).alias("ngram")
     t = (spread(train.select(F.col(id_col), F.col(text_col)), id_col)
          .select(id_col, toks).select(id_col, ngram))
     e = (eval_df.select(F.col(id_col).alias("eval_id"), toks)

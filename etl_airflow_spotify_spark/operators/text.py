@@ -79,9 +79,11 @@ def quality_score(text: Column) -> Column:
     return F.round(length_part + stop_part + punct_part, 6)
 
 
-def exact_fingerprint(text: Column) -> Column:
-    """Exact-duplicate fingerprint: md5 of the case/space-normalized text."""
-    return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
+def exact_fingerprint(text: str) -> Column:
+    """Exact-duplicate fingerprint of the string column named ``text``:
+    md5 of the case/space-normalized text, as one SQL expression."""
+    return F.expr(
+        f"md5(regexp_replace(lower(trim(`{text}`)), '\\\\s+', ' '))")
 
 
 def rolling_fingerprint(text: Column, width: int = 16) -> Column:

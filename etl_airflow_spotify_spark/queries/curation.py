@@ -14,8 +14,10 @@ import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import load_table, local_frame, parquet_footer
+from ..catalog import (load_table, local_frame, parquet_footer,
+                       read_columns)
 from ..operators import curation as C
+from ..operators.text import exact_fingerprint, word_histogram_stats
 from ..registry import register
 
 # Deterministic "benchmark" subset for the contamination check: every
@@ -357,11 +359,24 @@ def heavy_hitters_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
 V2_TOP_WORD_MAX = 0.12
 V2_DUP_BIGRAM_MAX = 0.05
 V2_ENTROPY_MIN = 4.0
-# The driver finish runs while the documents' parquet footer holds at
-# most this many uncompressed text bytes. The fetched n-grams come to
-# ~4-5x the text, so the Arrow columns stay near the ~64 MB driver
-# budget of graph.KCORE_LOCAL_FINISH_EDGE_MAX (sf0.1 holds 1.5 MB).
+# The driver finish runs while the documents' text holds at most this
+# many bytes, decoded (the footer screens first, with no read). The
+# fetched n-grams come to ~4-5x the text, so the Arrow columns stay near
+# the ~64 MB driver budget of graph.KCORE_LOCAL_FINISH_EDGE_MAX (sf0.1
+# holds 1.5 MB).
 V2_LOCAL_TEXT_BYTES_MAX = 12 * 2 ** 20
+
+# The row-local part of training_data_prep_v2, shared by both branches
+# as SQL text: each expression is one call into the JVM to build, where
+# the Column API takes one per node. A null text has null signals, so
+# the gate drops it.
+_V2_IS_EVAL = f"doc_id % {EVAL_MOD} = 0"
+# Nested left to right like a Column `&` chain (the SQL parser would
+# balance a flat AND list into a different, equivalent filter).
+_V2_GATE = (f"((top_word_frac <= {V2_TOP_WORD_MAX}D"
+            f" AND dup_bigram_frac <= {V2_DUP_BIGRAM_MAX}D)"
+            f" AND entropy >= {V2_ENTROPY_MIN}D)"
+            f" AND NOT ({_V2_IS_EVAL})")
 
 
 @register(
@@ -438,9 +453,10 @@ V2_LOCAL_TEXT_BYTES_MAX = 12 * 2 ** 20
         "decontamination (3-gram overlap vs the eval slice) -> per-"
         "lang corpus stats with exact membership (id_sum). The gate "
         "signals, fingerprint and n-grams are row-local columns over "
-        "each doc's tokens. While the documents' parquet footer holds "
-        f"at most {V2_LOCAL_TEXT_BYTES_MAX // 2 ** 20} MiB of text, one "
-        "Arrow fetch of those columns is finished on the driver (dedup, "
+        "each doc's tokens. While the documents hold at most "
+        f"{V2_LOCAL_TEXT_BYTES_MAX // 2 ** 20} MiB of text, the corpus "
+        "is read on the driver (no Spark scan) and one Arrow fetch of "
+        "those columns is finished there (dedup, "
         "decontamination and per-lang sums in Arrow) and returns as a "
         "LocalRelation: at that size per-job overhead outweighs the "
         "data. Above it the corpus is cached and every later stage is "
@@ -452,53 +468,27 @@ def training_data_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..caching import persist_tracked
-    from ..operators.text import exact_fingerprint, word_histogram_stats
     from ..queries.text import _docs as _text_docs
 
-    # The gate's four signals are row-local columns: the word fold and
-    # the bigrams run once per document and the gate is a plain filter
-    # (no (doc, word) shuffle, no join back). The fold, the bigrams and
-    # the n-grams read the projected _toks, never the split expression
-    # itself.
-    toks = (_text_docs(spark, sf_dir)
-            .select("doc_id", "lang", "text",
-                    F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-                    .alias("_toks")))
-    bigrams = F.expr(
-        "CASE WHEN size(_toks) < 2 THEN array() "
-        "ELSE transform(sequence(1, size(_toks) - 1), "
-        "i -> concat(_toks[i-1], ' ', _toks[i])) END")
-    h = toks.select("doc_id", "lang", "text", "_toks",
-                    word_histogram_stats("_toks").alias("_h"),
-                    bigrams.alias("_bgs"))
-    signals = h.select(
-        "doc_id", "lang", "text", "_toks",
-        F.col("_h.n_words").alias("n_words"),
-        F.round(F.col("_h.max_count").cast("double") / F.col("_h.n_words"),
-                4).alias("top_word_frac"),
-        F.round(F.col("_h.entropy"), 4).alias("entropy"),
-        F.when(F.size("_bgs") > 0,
-               F.round(1.0 - F.size(F.array_distinct("_bgs")).cast("double")
-                       / F.size("_bgs"), 4))
-        .otherwise(F.lit(0.0)).alias("dup_bigram_frac"))
-    # A null text has null signals, so the gate drops it.
-    gate = ((F.col("top_word_frac") <= V2_TOP_WORD_MAX)
-            & (F.col("dup_bigram_frac") <= V2_DUP_BIGRAM_MAX)
-            & (F.col("entropy") >= V2_ENTROPY_MIN)
-            & (F.col("doc_id") % EVAL_MOD != 0))
-    is_eval = F.col("doc_id") % EVAL_MOD == 0
-
-    # A corpus that fits: one Arrow fetch of the row-local columns (two
-    # jobs when spread shuffles the scan), finished on the driver. No
-    # cache, no fingerprint/doc_id/lang shuffles, no broadcast.
-    if (parquet_footer(sf_dir, "documents")[1]["text"]
-            <= V2_LOCAL_TEXT_BYTES_MAX):
-        fetched = signals.select(
+    # A corpus that fits: the three columns are read on the driver and
+    # handed to the JVM as a LocalRelation, whose scan splits over every
+    # core with no shuffle; one Arrow fetch of the row-local columns,
+    # finished on the driver. No cache, no fingerprint/doc_id/lang
+    # shuffles, no broadcast. The coalesce keeps the scan's own splits;
+    # it is there because the optimizer would otherwise fold the
+    # projection into the LocalRelation (ConvertToLocalRelation) and
+    # evaluate it at plan time on one driver thread: 1.5 s instead of
+    # 0.6 s at sf0.1 on 4 cores.
+    docs = _v2_local_docs(sf_dir)
+    if docs is not None:
+        source = spark.createDataFrame(docs).coalesce(
+            spark.sparkContext.defaultParallelism)
+        fetched = _v2_signals(source).select(
             "doc_id", "lang", "n_words",
-            F.coalesce(gate, F.lit(False)).alias("ok"),
-            is_eval.alias("is_eval"),
-            exact_fingerprint(F.col("text")).alias("fp"),
-            C.word_ngrams(F.col("_toks"), NGRAM_N).alias("ngrams"),
+            F.expr(f"coalesce({_V2_GATE}, false) AS ok"),
+            F.expr(f"{_V2_IS_EVAL} AS is_eval"),
+            exact_fingerprint("text").alias("fp"),
+            C.word_ngrams("_toks", NGRAM_N).alias("ngrams"),
         ).toArrow()
         return local_frame(spark, _v2_local_finish(fetched),
                            "lang STRING, n_docs BIGINT NOT NULL, "
@@ -507,16 +497,16 @@ def training_data_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The gate and both contamination sides read one cached frame
     # instead of rescanning the corpus — measured 17s -> ~6s at sf0.1
     # from the persist alone.
-    d = persist_tracked(signals.drop("_toks"))
-    gated = d.filter(gate)
+    d = persist_tracked(_v2_signals(_text_docs(spark, sf_dir)).drop("_toks"))
+    gated = d.filter(_V2_GATE)
 
-    deduped = (gated.withColumn("fp", exact_fingerprint(F.col("text")))
+    deduped = (gated.withColumn("fp", exact_fingerprint("text"))
                .withColumn("keep_id",
                            F.min("doc_id").over(Window.partitionBy("fp")))
                .filter(F.col("doc_id") == F.col("keep_id")))
 
-    train = d.filter(F.col("doc_id") % EVAL_MOD != 0)
-    evals = d.filter(is_eval)
+    train = d.filter(f"NOT ({_V2_IS_EVAL})")
+    evals = d.filter(_V2_IS_EVAL)
     contaminated = C.ngram_contamination(
         train, evals, "doc_id", "text", n=NGRAM_N).select("doc_id")
 
@@ -525,6 +515,54 @@ def training_data_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("long").alias("n_docs"),
                  F.sum("doc_id").cast("long").alias("id_sum"),
                  F.sum("n_words").cast("long").alias("total_words")))
+
+
+def _v2_signals(docs: DataFrame) -> DataFrame:
+    """doc_id, lang, text, the projected tokens ``_toks`` and the gate's
+    four signals over a (doc_id, lang, text) frame. The signals are
+    row-local: the word fold and the bigrams run once per document and
+    the gate is a plain filter (no (doc, word) shuffle, no join back).
+    The fold and the bigrams read the projected ``_toks``, never the
+    split expression itself."""
+    toks = docs.selectExpr("doc_id", "lang", "text",
+                           r"split(trim(lower(text)), '\\s+') AS _toks")
+    h = toks.select(
+        "doc_id", "lang", "text", "_toks",
+        word_histogram_stats("_toks").alias("_h"),
+        F.expr("CASE WHEN size(_toks) < 2 THEN array() "
+               "ELSE transform(sequence(1, size(_toks) - 1), "
+               "i -> concat(_toks[i-1], ' ', _toks[i])) END AS _bgs"))
+    return h.selectExpr(
+        "doc_id", "lang", "text", "_toks",
+        "_h.n_words AS n_words",
+        "round(CAST(_h.max_count AS DOUBLE) / _h.n_words, 4)"
+        " AS top_word_frac",
+        "round(_h.entropy, 4) AS entropy",
+        "CASE WHEN size(_bgs) > 0 THEN round(1.0D -"
+        " CAST(size(array_distinct(_bgs)) AS DOUBLE) / size(_bgs), 4)"
+        " ELSE 0.0D END AS dup_bigram_frac")
+
+
+def _v2_local_docs(sf_dir: str) -> pa.Table | None:
+    """The corpus's (doc_id, lang, text) read on the driver when its text
+    fits ``V2_LOCAL_TEXT_BYTES_MAX``, else None. The footer is the first
+    screen (no read); it counts a dictionary-encoded repeated text once,
+    so the text is then read dictionary-encoded and gated on its decoded
+    bytes (each row's dictionary entry, no duplicate materialized)
+    before it is decoded."""
+    if (parquet_footer(sf_dir, "documents")[1]["text"]
+            > V2_LOCAL_TEXT_BYTES_MAX):
+        return None
+    t = read_columns(sf_dir, "documents", ["doc_id", "lang", "text"],
+                     dictionary=("text",))
+    text = t["text"]
+    decoded_bytes = sum(
+        pc.sum(pc.take(pc.binary_length(c.dictionary), c.indices)).as_py()
+        or 0 for c in text.chunks)
+    if decoded_bytes > V2_LOCAL_TEXT_BYTES_MAX:
+        return None
+    return t.set_column(t.schema.get_field_index("text"), "text",
+                        text.cast(pa.string()))
 
 
 def _v2_local_finish(t: pa.Table) -> list[tuple]:

@@ -170,7 +170,7 @@ def ngram_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    return D.exact_duplicates(d, "doc_id", T.exact_fingerprint(F.col("text")))
+    return D.exact_duplicates(d, "doc_id", T.exact_fingerprint("text"))
 
 
 # Shared by dedup_cluster_assign (min-label propagation) and
@@ -336,7 +336,7 @@ def training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (d.filter(F.col("lang") == "en")
              .withColumn("quality", T.quality_score(t))
              .filter(F.col("quality") >= 0.5))
-    exact = (base.withColumn("fp", T.exact_fingerprint(t))
+    exact = (base.withColumn("fp", T.exact_fingerprint("text"))
                  .withColumn("keep_id",
                              F.min("doc_id").over(Window.partitionBy("fp")))
                  .filter(F.col("doc_id") == F.col("keep_id")))

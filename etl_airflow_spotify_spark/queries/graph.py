@@ -8,7 +8,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import load_table, local_frame, parquet_footer
+from ..catalog import (load_table, local_frame, parquet_footer,
+                       read_columns)
 from ..operators import graph as G
 from ..registry import register
 
@@ -439,10 +440,10 @@ def rules_wilson_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Where the rounds run is measured, against one gate,
 # KCORE_LOCAL_FINISH_EDGE_MAX (4M, ~64 MB of int64 pairs):
 # * Local start. If lineitem's parquet footer counts at most the gate's
-#   rows (read with no job), one row-capped Arrow fetch of the (order,
-#   part) pairs (limit gate + 1, one job). If at most the gate's rows
-#   come back and the pre-distinct edge bound sum k(k-1) over orders of
-#   k parts is at most the gate, the graph is built on the driver
+#   rows, the (order, part) pairs are read on the driver
+#   (catalog.read_columns; neither read runs a Spark job). If the
+#   pre-distinct edge bound sum k(k-1) over orders of k parts is at most
+#   the gate too, the graph is built on the driver
 #   (operators/graph.py::cooccurrence_edges_local, exact twin of
 #   cooccurrence_edges) and every round peels there in NumPy.
 # * Otherwise the edge set is built distributed and counted once;
@@ -452,8 +453,8 @@ def rules_wilson_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Below a few million edges a distributed round is mostly per-job
 # scheduling: on a 4-core box the sf0.01 build (231k edges) took 35 jobs
 # and ~3 s all distributed, 6 jobs and ~0.9 s with the distributed
-# build and local finish, and 1 job and ~0.2 s with the local start;
-# at sf0.1 (2.39M edges) ~4.5 s with the distributed build and ~1 s
+# build and local finish, and no job and ~0.05 s with the local start;
+# at sf0.1 (2.39M edges) ~4.5 s with the distributed build and ~0.35 s
 # with the local start. The driver never holds more than the gate's
 # pairs or edges; above it the distributed rounds peel until the graph
 # is that small.
@@ -501,9 +502,9 @@ def _kcore_oracle_sql() -> str:
         "distributed (one degree aggregate + two semi-joins, edges "
         "localCheckpoint per round) only while the measured edge set "
         f"is above {KCORE_LOCAL_FINISH_EDGE_MAX:,} (~64 MB of int64 "
-        "pairs). When lineitem's parquet footer row count and one "
-        "row-capped Arrow fetch of the (order, part) pairs fit that "
-        "gate, and so does the k(k-1) edge bound, the "
+        "pairs). When lineitem's parquet footer row count fits that "
+        "gate, the (order, part) pairs are read on the driver with no "
+        "Spark job; if the k(k-1) edge bound fits too, the "
         "graph is built and peeled exactly on the driver in NumPy; "
         "otherwise the distributed rounds hand the surviving edges to "
         "the same NumPy peel once they fit, because below that size "
@@ -512,19 +513,14 @@ def _kcore_oracle_sql() -> str:
     tags=("X123", "X42", "X7", "X3"),
 )
 def kcore_peeling_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
     gate = KCORE_LOCAL_FINISH_EDGE_MAX
     graph = None
-    # More footer rows than the gate: the capped fetch could only come
-    # back full, so skip it.
     if parquet_footer(sf_dir, "lineitem")[0] <= gate:
-        pairs = (li.select("l_orderkey", "l_partkey").limit(gate + 1)
-                 .toArrow())
-        if pairs.num_rows <= gate:
-            graph = G.cooccurrence_edges_local(pairs, "l_orderkey",
-                                               "l_partkey", gate)
+        pairs = read_columns(sf_dir, "lineitem", ["l_orderkey", "l_partkey"])
+        graph = G.cooccurrence_edges_local(pairs, "l_orderkey", "l_partkey",
+                                           gate)
     if graph is None:
-        summaries = _kcore_distributed_rounds(li)
+        summaries = _kcore_distributed_rounds(spark, sf_dir)
     else:
         ids, src, dst = graph
         summaries = G.kcore_peel_dense(src, dst, ids.size, KCORE_K, 1,
@@ -533,7 +529,9 @@ def kcore_peeling_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                        "round INT, nodes_kept BIGINT, edges_kept BIGINT")
 
 
-def _kcore_distributed_rounds(li: DataFrame) -> list[tuple[int, int, int]]:
+def _kcore_distributed_rounds(spark: SparkSession,
+                              sf_dir: str) -> list[tuple[int, int, int]]:
+    li = load_table(spark, sf_dir, "lineitem")
     edges = G.cooccurrence_edges(li, "l_orderkey", "l_partkey") \
         .localCheckpoint(eager=False)
     n_edges = edges.count()

@@ -200,7 +200,7 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.col("text")
     return d.select(
         "doc_id",
-        T.exact_fingerprint(t).alias("exact_fp"),
+        T.exact_fingerprint("text").alias("exact_fp"),
         T.rolling_fingerprint(t, 16).alias("rolling_fp"),
     )
 
@@ -1267,7 +1267,7 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.n_tokens(F.col("text")).cast("long").alias("n_tokens"),
         F.round(T.quality_score(F.col("text")) * 1e6, 0).cast("long")
         .alias("q_micro"),
-        T.exact_fingerprint(F.col("text")).alias("fp"),
+        T.exact_fingerprint("text").alias("fp"),
         F.when(F.col("text").rlike(_EMAIL_RE), 1).otherwise(0)
         .alias("has_email"))
     fpc = base.groupBy("fp").agg(F.count("*").cast("long").alias("c"))

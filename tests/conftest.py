@@ -41,6 +41,34 @@ def jobs_of(spark):
     return run
 
 
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """``py4j_calls(fn)`` returns ``(fn(), number of commands the calling
+    thread sent to the JVM while fn ran)``: each is one py4j round trip.
+    Other threads are not counted: py4j's finalizer thread sends the
+    release of every freed JVM object's Python proxy whenever it runs."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    caller = threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        if threading.get_ident() == caller:
+            sent[0] += 1
+        return send(self, *args, **kwargs)
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+
+    def run(fn):
+        before = sent[0]
+        out = fn()
+        return out, sent[0] - before
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -1,6 +1,7 @@
 """``catalog.load_table`` infers a parquet file's schema once and reuses
 it while the file is unchanged; ``catalog.parquet_footer`` sizes a table
-from its footers, keyed the same way."""
+from its footers, keyed the same way; ``catalog.read_columns`` reads a
+table's columns on the driver with the values Spark reads."""
 
 from __future__ import annotations
 
@@ -10,7 +11,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from etl_airflow_spotify_spark.catalog import load_table, parquet_footer
+from etl_airflow_spotify_spark.catalog import (load_table, parquet_footer,
+                                              read_columns)
 
 
 def test_second_load_reuses_the_inferred_schema(spark, tmp_path, jobs_of):
@@ -59,3 +61,24 @@ def test_rewritten_file_is_sized_again(tmp_path):
     rows, sizes = parquet_footer(str(tmp_path), "t")
     assert (rows, list(sizes)) == (3, ["k", "text"])
     assert sizes["text"] >= 100
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_read_columns_matches_spark(spark, sf_dir, sf):
+    """The columns the driver finishes read (k-core's pairs, curation
+    v2's corpus) hold the values Spark's scan reads, at each test scale
+    factor; ``events``, whose ``ts`` Spark reads normalized, is
+    refused."""
+    def rows(t):
+        return sorted(zip(*(c.to_pylist() for c in t.columns)), key=repr)
+
+    sf_dir = os.path.join(os.path.dirname(sf_dir), sf)
+    for name, cols in (("lineitem", ["l_orderkey", "l_partkey"]),
+                       ("documents", ["doc_id", "lang", "text"])):
+        local = read_columns(sf_dir, name, cols)
+        spark_side = load_table(spark, sf_dir, name).select(cols).toArrow()
+        assert local.column_names == spark_side.column_names == cols
+        assert local.num_rows == spark_side.num_rows
+        assert rows(local) == rows(spark_side)
+    with pytest.raises(ValueError):
+        read_columns(sf_dir, "events", ["ts"])

@@ -95,11 +95,40 @@ def test_branches_agree_on_edge_corpora(spark, tmp_path, monkeypatch,
         assert rows == []
 
 
+def _is_local_relation(df) -> bool:
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return "LocalRelation" in plan and "LogicalRDD" not in plan
+
+
 def test_local_branch_is_one_fetch(spark, sf_dir, jobs_of):
-    """The scan, spread's shuffle and nothing else; the result is an
-    Arrow-built LocalRelation."""
+    """The corpus is read on the driver, so the fetch of the row-local
+    columns is the only job; the result is an Arrow-built
+    LocalRelation."""
     df, jobs = jobs_of("v2-local",
                        lambda: Q.training_data_prep_v2(spark, sf_dir))
-    assert jobs <= 2
-    plan = df._jdf.queryExecution().analyzed().toString()
-    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert jobs == 1
+    assert _is_local_relation(df)
+
+
+def test_duplicate_heavy_corpus_is_gated_on_decoded_text(spark, tmp_path,
+                                                         monkeypatch):
+    """Parquet stores a repeated text once in its dictionary, so the
+    footer counts 200 copies of one 1 KB text as about 1 KB. The gate
+    must count the 200 KB a local finish would fetch: with a 100 KB
+    budget the corpus takes the distributed branch, which gives the rows
+    of the forced local branch."""
+    text = " ".join(f"word{j:03d}" for j in range(128))
+    ids = [i for i in range(1, 300) if i % EVAL_ID][:200]
+    sf_dir = _write(tmp_path, [(i, "en", text) for i in ids])
+    budget = 100 * 2 ** 10
+    assert Q.parquet_footer(sf_dir, "documents")[1]["text"] < budget
+    assert len(text) * len(ids) > budget
+    monkeypatch.setattr(Q, "V2_LOCAL_TEXT_BYTES_MAX", budget)
+    try:
+        df = Q.training_data_prep_v2(spark, sf_dir)
+        assert not _is_local_relation(df)
+        gated = df.schema, sorted(map(tuple, df.collect()), key=repr)
+    finally:
+        release_all()
+    assert gated == _branch(spark, sf_dir, monkeypatch, 2 ** 62)
+    assert gated[1] == [("en", 1, ids[0], 128)]

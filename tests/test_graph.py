@@ -223,7 +223,7 @@ def test_kcore_profile_same_on_every_branch(spark, sf_dir, monkeypatch,
     import etl_airflow_spotify_spark.queries.graph as Q
     from etl_airflow_spotify_spark.catalog import load_table
 
-    starts, fetched = [], []
+    starts, fetched, read = [], [], []
 
     def trace(name, start):
         fn = getattr(G, name)
@@ -243,11 +243,18 @@ def test_kcore_profile_same_on_every_branch(spark, sf_dir, monkeypatch,
         fetched.append((tuple(table.column_names), table.num_rows))
         return table
     monkeypatch.setattr(DataFrame, "toArrow", fetch)
+    read_columns = Q.read_columns
+
+    def read_local(*args):
+        read.append(args)
+        return read_columns(*args)
+    monkeypatch.setattr(Q, "read_columns", read_local)
 
     def profile(gate):
         monkeypatch.setattr(Q, "KCORE_LOCAL_FINISH_EDGE_MAX", gate)
         starts.clear()
         fetched.clear()
+        read.clear()
         df, jobs = jobs_of(f"kcore-{gate}",
                            lambda: Q.kcore_peeling_profile(spark, sf_dir))
         assert _is_local_relation(df)
@@ -262,31 +269,34 @@ def test_kcore_profile_same_on_every_branch(spark, sf_dir, monkeypatch,
              .groupBy("l_orderkey").agg((k * (k - 1)).alias("b"))
              .agg(F.sum("b")).first()[0])
     assert n_rows < n0 < bound, "a gate in [n0, bound) must start distributed"
+    pairs_read = [(sf_dir, "lineitem", ["l_orderkey", "l_partkey"])]
 
     local, s, jobs = profile(Q.KCORE_LOCAL_FINISH_EDGE_MAX)
     assert s == [("cooccurrence_edges_local", None), ("kcore_peel_dense", 1)]
-    assert jobs == 1 and fetched == [(("l_orderkey", "l_partkey"), n_rows)]
+    # the pairs are read on the driver: no Spark job, no fetch
+    assert jobs == 0 and fetched == [] and read == pairs_read
     # -1, not 0: a graph that peels to nothing has 0 <= 0 edges left
     distributed, s, _ = profile(-1)
-    assert s == [] and len(distributed) == Q.KCORE_ROUNDS
+    assert s == [] and len(distributed) == Q.KCORE_ROUNDS and read == []
     n1 = distributed[0][2]
     assert n1 < n0, "round 1 must peel for the mid-way switch to happen"
     switched, s, _ = profile(n1 + (n0 - n1) // 2)
     assert s == [("cooccurrence_edges_local", None), ("kcore_peel_local", 2),
                  ("kcore_peel_dense", 2)]
+    assert read == pairs_read
     finished, s, _ = profile(n0)
     assert s == [("cooccurrence_edges_local", None), ("kcore_peel_local", 1),
                  ("kcore_peel_dense", 1)]
-    # more footer rows than the gate: the pairs are never fetched and
-    # the edge set is built distributed
+    # more footer rows than the gate: the pairs are never read and the
+    # edge set is built distributed
     built = []
 
-    def build_distributed(li):
-        built.append(li)
-        return distributed_rounds(li)
+    def build_distributed(*args):
+        built.append(args)
+        return distributed_rounds(*args)
     monkeypatch.setattr(Q, "_kcore_distributed_rounds", build_distributed)
     capped, s, _ = profile(n_rows // 2)
-    assert len(built) == 1
+    assert len(built) == 1 and read == []
     assert all(cols == ("src", "dst") for cols, _ in fetched), fetched
     assert ("cooccurrence_edges_local", None) not in s
     assert local == distributed == switched == finished == capped, local

@@ -156,7 +156,7 @@ def test_exact_duplicates_groups(spark):
     df = spark.createDataFrame(
         [(1, "Hello  World"), (2, "hello world"), (3, "other text")],
         ["doc_id", "text"])
-    groups = exact_duplicates(df, "doc_id", exact_fingerprint(F.col("text")))
+    groups = exact_duplicates(df, "doc_id", exact_fingerprint("text"))
     dup = [r for r in groups.collect() if r.n == 2]
     assert len(dup) == 1 and dup[0].keep_id == 1
 

@@ -389,6 +389,38 @@ def test_training_prep_v2_ngrams_read_the_cache_unshuffled(spark, sf_dir,
             "\n".join(lines[i:scan + 1])
 
 
+def test_training_prep_v2_local_build_is_one_job(spark, sf_dir, monkeypatch,
+                                                jobs_of, py4j_calls):
+    """Below the gate a warm build reads the corpus on the driver and
+    runs one job, the fetch of its row-local columns: the plan reads a
+    LocalRelation, with no file scan and no shuffle, and the signals are
+    computed in that job's tasks rather than folded into the relation
+    on the driver. Its expressions are SQL text, so building it takes
+    few JVM round trips."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    fetched = []
+    to_arrow = DataFrame.toArrow
+
+    def fetch(self):
+        fetched.append(self)
+        return to_arrow(self)
+    monkeypatch.setattr(DataFrame, "toArrow", fetch)
+
+    def build():
+        return _df("training_data_prep_v2", spark, sf_dir)
+    build()
+    (_, jobs), calls = py4j_calls(lambda: jobs_of("v2-warm", build))
+    assert jobs == 1
+    assert calls <= 300, calls
+    plan = fetched[-1]._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "FileScan" not in plan and "Exchange" not in plan, plan
+    scan = next(line for line in plan.splitlines()
+                if "LocalTableScan" in line)
+    assert "ngrams" not in scan and "aggregate(" in plan, plan
+
+
 def test_ngram_contamination_tokenizes_once(spark, sf_dir):
     """The n-gram lambda reads a projected token column: an inlined split
     would re-tokenize the whole text once per n-gram."""
